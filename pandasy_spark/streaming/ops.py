@@ -186,7 +186,12 @@ def stream_state_partitions(
 
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
-        return max(1, int(env))
+        if not env.strip().isdigit() or int(env) < 1:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive"
+                f" integer, got {env!r}"
+            )
+        return int(env)
     return min(
         max_partitions,
         max(2, (n_rows + rows_per_partition - 1) // rows_per_partition),

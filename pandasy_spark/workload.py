@@ -9007,14 +9007,15 @@ def events_attribution_linear(spark, sf_dir):
 )
 def agg_median_twopass(spark, sf_dir):
     """EXACT distributed quantiles WITHOUT a global sort
-    (extended/profile.py quantile_disc_twopass): per-group
-    min/max/count -> 4096-cell histogram (map-combined) locates the
-    target rank's cell -> only that ~n/4096-row sliver is aggregated
-    per value and scanned cumulatively.  percentile_disc semantics
-    (rank ceil(q*n), duplicates counted), BIGINT-exact, three
-    quantiles per returnflag.  The plan the engine's sort-based
-    percentile cannot ship at 100 TB: no range partitioning, no
-    data-sized sort — pinned in tests/test_round6_ops.py."""
+    (extended/profile.py _order_stats): per-group min/max/count ->
+    4096-cell histogram (map-combined) locates each target rank's
+    cell -> only those ~n/4096-row cells are aggregated per value and
+    scanned cumulatively.  percentile_disc semantics (rank ceil(q*n),
+    duplicates counted), BIGINT-exact, three quantiles per returnflag
+    from ONE stats pass, histogram and sliver.  The plan the engine's
+    sort-based percentile cannot ship at 100 TB: no range
+    partitioning, no data-sized sort — pinned in
+    tests/test_round6_ops.py."""
     li = _t(spark, sf_dir, "lineitem")
     src = li.select(
         "l_returnflag",
@@ -9022,23 +9023,9 @@ def agg_median_twopass(spark, sf_dir):
         .cast("long")
         .alias("cents"),
     )
-    from .extended.profile import quantile_disc_twopass
+    from .extended.profile import _quantile_disc
 
-    parts = []
-    for q in (250, 500, 900):
-        parts.append(
-            quantile_disc_twopass(src, ["l_returnflag"], "cents", q_milli=q)
-            .select(
-                "l_returnflag",
-                F.lit(q).cast("int").alias("q_milli"),
-                "n",
-                "q_value",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _quantile_disc(src, ["l_returnflag"], "cents", [250, 500, 900])
 
 
 @query(
@@ -12586,30 +12573,17 @@ def text_length_quantiles(spark, sf_dir):
     """Token-length distribution per language (the sequence-length
     planning input for packing budgets): exact p25/p50/p90 via the
     grouped two-pass order statistic — the token counting is one
-    narrow codegen map, pinned once so the three quantile passes
-    share it."""
-    from .extended.profile import quantile_disc_twopass
+    narrow codegen map, and all three quantiles share one stats pass,
+    histogram and sliver."""
+    from .extended.profile import _quantile_disc
     from .extended.text import tokens as _tok
 
     docs = _t(spark, sf_dir, "documents")
     t = docs.select(
         "lang",
         F.size(_tok(F.col("text"))).cast("long").alias("n_tok"),
-    ).localCheckpoint(eager=False)
-    parts = []
-    for qm in (250, 500, 900):
-        parts.append(
-            quantile_disc_twopass(t, ["lang"], "n_tok", q_milli=qm).select(
-                "lang",
-                F.lit(qm).cast("int").alias("q_milli"),
-                "n",
-                "q_value",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    )
+    return _quantile_disc(t, ["lang"], "n_tok", [250, 500, 900])
 
 
 # =====================================================================

@@ -177,6 +177,14 @@ def test_stream_state_partitions_volume_linear_and_capped(monkeypatch):
     assert stream_state_partitions(10_000_000_000, max_partitions=64) == 64
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "7")
     assert stream_state_partitions(10_000_000_000) == 7
+    # a bad override names the variable instead of failing bare
+    # (non-numeric) or being clamped silently (0, negative)
+    for bad in ("abc", "0", "-3", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", bad)
+        with pytest.raises(
+            ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+        ):
+            stream_state_partitions(5_000)
 
 
 def test_no_concurrency_flag_parses_falsey_values(monkeypatch, spark):

@@ -398,6 +398,18 @@ def test_quantile_twopass_exact_and_edge(spark):
     const = spark.createDataFrame([("a", 7)] * 5, "g string, v long")
     r = quantile_disc_twopass(const, ["g"], "v", q_milli=500).collect()[0]
     assert r["q_value"] == 7 and r["n"] == 5
+    # NULL values are ignored, as percentile_disc ignores them: three
+    # non-NULL values [1, 2, 7] -> rank ceil(0.5*3) = 2 -> 2
+    nulls = spark.createDataFrame(
+        [(None,)] * 3 + [(1,), (2,), (7,)], "v long"
+    )
+    r = quantile_disc_twopass(nulls, [], "v", q_milli=500).collect()
+    assert [(x["n"], x["q_value"]) for x in r] == [(3, 2)]
+    gnulls = spark.createDataFrame(
+        [("a", None), ("a", None), ("a", 4), ("a", 9)], "g string, v long"
+    )
+    r = quantile_disc_twopass(gnulls, ["g"], "v", q_milli=500).collect()
+    assert [(x["g"], x["n"], x["q_value"]) for x in r] == [("a", 2, 4)]
     with pytest.raises(ValueError):
         quantile_disc_twopass(df, ["g"], "v", q_milli=0)
 
@@ -414,6 +426,28 @@ def test_quantile_twopass_no_global_sort_plan(spark, sf_dir):
     # the whole point: no data-sized range-partitioned sort anywhere
     assert "rangepartitioning" not in plan.lower()
     assert "Python" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["agg_median_twopass", "text_length_quantiles"]
+)
+def test_quantile_gates_one_order_stats_pass(spark, sf_dir, name):
+    """Three quantiles per group must come from ONE shared stats pass,
+    histogram and sliver: one call runs ~12 jobs from construction
+    through a noop write, the former three-calls-and-union form 37."""
+    from pandasy_spark.workload import QUERIES
+
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 15, n_jobs
 
 
 def test_chi_square_known_value(spark):

@@ -1,4 +1,3 @@
-import pytest
 """Deterministic sampling / splitting / packing (extended/sampling.py).
 
 Each operator is checked against an independent Python reimplementation
@@ -11,6 +10,7 @@ packing cumsum is NOT a single-task global window).
 import math
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pandasy_spark.extended import sampling as S
