@@ -4,17 +4,26 @@
 ``queries()`` / ``oracle_sql()`` expose the full workload registry
 (pandasy_spark.workload) for the driver's DuckDB-oracle correctness
 gate at sf0.01.
+
+Each round's correctness gate records only the first 50 names, so both
+maps list the stalest gates first, as witnessed by the committed
+``CORRECTNESS_r*.json`` records next to this module: gates no record
+has MATCHed lead, then gates by the last round that MATCHed them,
+registry order breaking ties.  A new record rotates the window.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from pandasy_spark.workload import ORACLES, QUERIES  # noqa: E402
 
@@ -24,420 +33,38 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# Latest-witness tiers across CORRECTNESS_r01..r07 — the tier records
-# WHICH round last witnessed a query, so each new round re-proves the
-# stalest names first inside the driver's 50-row recording window.
-# Round 6 added 126 queries into that 50-row window; round 7 drained
-# the first 50 of the backlog; round 8 fronts the remaining 27
-# never-witnessed names + the 9 changed-after-witness gates, then
-# starts re-witnessing the stale r1/r2 tier (VERDICT r7 item #1).
-_WITNESSED_R5 = {
-    "agg_cube", "agg_distinct", "agg_grouping_sets", "agg_percentiles",
-    "agg_rollup", "agg_stats", "date_funcs", "dedup_exact",
-    "dedup_minhash", "dedup_ngram_exact", "dedup_ngram_jaccard",
-    "dedup_paragraph", "dedup_simhash", "distinct_status",
-    "events_asof", "events_json", "events_sessionize",
-    "events_tolerance_join", "events_window", "expr_arith_cmp",
-    "expr_case_coalesce", "expr_cast_strict", "expr_casts",
-    "expr_predicates", "expr_string_extra", "graph_kcore",
-    "groupby_apply", "knn_cosine", "knn_lsh", "knn_pq",
-    "multimodal_features", "multimodal_tiff", "pipeline_near_dedup",
-    "setop_except", "setop_except_dups", "setop_intersect",
-    "setop_intersect_dups", "sketch_hll", "sketch_kmv", "snapshot_diff",
-    "sort_limit_topn", "string_math_funcs", "text_langid",
-    "text_quality_train", "text_rake", "text_stats", "text_token_freq",
-    "topk_per_group", "window_rank", "window_running",
-}
-_WITNESSED_R4 = {
-    "agg_incremental", "basket_affinity", "dedup_containment", "dedup_url",
-    "embedding_kmeans", "events_anomaly", "events_asof_directions",
-    "events_attribution", "events_rfm", "events_sequences",
-    "filter_truthy", "graph_label_prop", "graph_pagerank",
-    "graph_triangles", "join_anti", "join_cross", "join_full",
-    "join_inner", "join_left", "join_right", "join_semi", "merge_upsert",
-    "multimodal_bmp", "multimodal_gif", "multimodal_phash",
-    "multimodal_spectral", "multimodal_video", "multimodal_wav",
-    "multimodal_webp", "pack_manifest", "pipeline_rag", "profile_corr",
-    "profile_dq", "profile_drift", "profile_entropy", "q1_pricing_summary",
-    "q2_min_cost_supplier", "q3_shipping_priority", "q5_local_supplier",
-    "sample_temporal_split", "scd2_merge", "setop_union",
-    "setop_union_all", "streaming_dedup", "streaming_join",
-    "streaming_late_data", "text_hash_features", "text_quality_classifier",
-    "text_search", "text_textrank",
-}
-
-_WITNESSED_R3 = {
-    "agg_approx", "array_functions", "correlated_min",
-    "decontaminate_bloom", "dedup_blocked", "dedup_embedding",
-    "dedup_rolling", "embedding_pca", "events_funnel", "events_retention",
-    "events_time_rollup", "expr_null_funcs", "join_salted", "knn_ivf",
-    "map_functions", "multimodal_audio", "multimodal_frames",
-    "multimodal_jpeg", "multimodal_png", "pipeline_clean_corpus",
-    "profile_heavy_hitters", "q10_returned_items", "q11_important_stock",
-    "q12_shipmode", "q14_promo_effect", "q15_top_supplier",
-    "q16_parts_supplier", "q17_small_quantity", "q18_large_orders",
-    "q19_discounted_revenue", "q20_supplier_part_volume",
-    "q21_waiting_supplier", "q22_global_balance", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "sample_reservoir", "setop_except_all", "setop_intersect_all",
-    "sql_passthrough", "streaming_sessionize", "streaming_window",
-    "text_bpe_learn", "text_chunking", "text_collocations",
-    "text_subword_fingerprint", "text_tokenize", "unpivot_measures",
-    "window_range_frame",
-}
-
-_WITNESSED_R1R2 = {
-    "agg_bitwise", "agg_collect", "agg_mode_argmax", "decontaminate",
-    "decontaminate_semantic", "dedup_components", "dedup_incremental",
-    "dedup_levenshtein", "dedup_semantic", "dedup_span", "dedup_winnow",
-    "embedding_centroids", "events_hopping", "events_range_window",
-    "events_session_window", "expr_null_safe_eq", "knn_quantized",
-    "layout_zorder", "pack_chunks", "pack_greedy",
-    "pipeline_pretraining", "pivot_status_by_priority",
-    "profile_equidepth", "profile_histogram", "profile_lineitem",
-    "q13_customer_distribution", "q4_order_priority",
-    "sample_curriculum", "sample_domain_cap", "sample_interleave",
-    "sample_mixture", "sample_split", "sample_stratified",
-    "text_bpe_pairs", "text_lm_score", "text_pii",
-    "text_quality_filter", "text_repetition", "text_tficf",
-    "window_distribution",
-}
-
-# Round-6 additions: CORRECTNESS_r06 recorded exactly the first 50 of
-# this list (all green); positions 50..125 are the never-witnessed
-# backlog that registers FIRST for rounds 7-8.
-_R6_NEW: list[str] = [
-    "graph_bfs",
-    "events_markov",
-    "sketch_cms",
-    "sketch_hll_merge",
-    "text_bm25",
-    "multimodal_sniff",
-    "text_script",
-    "sample_weighted",
-    "sketch_kmv_union",
-    "knn_ivfpq",
-    "streaming_hll",
-    "text_normalize",
-    "events_attribution_linear",
-    "agg_median_twopass",
-    "streaming_topk",
-    "pipeline_triage",
-    "profile_chisq",
-    "sketch_cms_join_size",
-    "multimodal_tga",
-    "cdc_apply",
-    "events_resample",
-    "dedup_weighted_jaccard",
-    "sketch_kmv_intersect",
-    "graph_sssp",
-    "spatial_radius_join",
-    "knn_beam",
-    "events_ewma",
-    "streaming_enrich",
-    "text_readability",
-    "profile_benford",
-    "graph_similarity",
-    "events_session_attribution",
-    "multimodal_pcx",
-    "events_interval_join",
-    "events_funnel_windowed",
-    "sketch_bloom_union",
-    "streaming_upsert",
-    "profile_ks",
-    "events_ab_test",
-    "source_binary_files",
-    "source_csv",
-    "source_jsonl",
-    "source_orc",
-    "source_partitioned",
-    "source_bucketed_join",
-    "profile_mannwhitney",
-    "graph_scc",
-    "layout_row_ids",
-    "source_dpp",
-    "events_streaks",
-    "agg_quantile_cont",
-    "profile_gini",
-    "sample_bootstrap",
-    "text_phrase",
-    "sql_correlated",
-    "multimodal_resample",
-    "events_concurrency",
-    "profile_kanon",
-    "pareto_frontier",
-    "source_fixed_width",
-    "udf_scalar_arrow",
-    "spatial_geofence",
-    "events_coalesce",
-    "agg_weighted_median",
-    "profile_cramers",
-    "sample_negatives",
-    "text_vocab_growth",
-    "text_oov",
-    "events_sliding_distinct",
-    "events_interarrival",
-    "profile_key_skew",
-    "events_seasonal",
-    "sketch_bitmap",
-    "window_nth_value",
-    "setop_union_byname",
-    "events_wow",
-    "profile_linreg",
-    "graph_degrees",
-    "events_forecast",
-    "expr_decimal_exact",
-    "expr_levenshtein",
-    "explode_outer_nulls",
-    "text_length_quantiles",
-    "ml_target_encode",
-    "profile_winsorize",
-    "agg_retractable",
-    "sql_recursive",
-    "sql_lateral",
-    "join_null_safe_eq",
-    "expr_try_arith",
-    "events_cusum",
-    "sample_bootstrap_ci",
-    "sample_kfold",
-    "events_churn_labels",
-    "multimodal_motion",
-    "streaming_cdc",
-    "q_yoy_growth",
-    "warehouse_forget",
-    "graph_neighbor_agg",
-    "streaming_outer_join",
-    "embedding_drift",
-    "events_attribution_markov",
-    "agg_quantile_cont_grouped",
-    "streaming_bitmap",
-    "multimodal_ico",
-    "source_parquet_codecs",
-    "pipeline_multimodal",
-    "graph_ppr",
-    "events_ltv",
-    "dedup_cluster_sizes",
-    "layout_hilbert",
-    "multimodal_qoi",
-    "graph_hits",
-    "profile_psi",
-    "sample_class_balance",
-    "multimodal_g711",
-    "multimodal_exif",
-    "warehouse_golden_record",
-    "events_survival",
-    "text_gopher_rules",
-    "text_c4_clean",
-    "pipeline_entity_resolution",
-    "pipeline_feature_assembly",
-    "ml_eval_binary",
-    "profile_jsd",
-    "text_zipf",
-]
+def _stalest_first(
+    names: Iterable[str], records: Mapping[int, Mapping[str, Mapping]]
+) -> list[str]:
+    """``names`` sorted by the last round whose record MATCHed them (0
+    if none did); the sort is stable, so ties keep the given order.  An
+    entry MATCHes only when rows, schema and hash all match: a
+    ``no_oracle`` or mismatch entry witnesses nothing."""
+    last: dict[str, int] = {}
+    for rnd, record in records.items():
+        for name, r in record.items():
+            if r.get("rows_match") and r.get("schema_match") and r.get("hash_match"):
+                last[name] = max(last.get(name, 0), rnd)
+    return sorted(names, key=lambda name: last.get(name, 0))
 
 
-_WITNESSED_R6 = set(_R6_NEW[:50])
-# CORRECTNESS_r07 recorded exactly _R6_NEW[50:100] (50/50 green).
-_WITNESSED_R7 = set(_R6_NEW[50:100])
-
-# CORRECTNESS_r08 recorded these 50 rows (all green, post-final-commit
-# witness): the last 26 never-witnessed _R6_NEW names,
-# streaming_eviction, the 9 r7-changed gates, the new dedup_lsh_pairs,
-# and the first 13 stale r1/r2 re-witnesses.  The cumulative
-# ever-witnessed union after r8 is 318/323.
-_WITNESSED_R8 = set(_R6_NEW[100:]) | {
-    "streaming_eviction", "dedup_lsh_pairs",
-    "dedup_ngram_jaccard", "dedup_minhash", "dedup_semantic",
-    "dedup_embedding", "decontaminate_semantic", "profile_ks",
-    "profile_mannwhitney", "events_rfm", "profile_equidepth",
-    "agg_bitwise", "agg_collect", "agg_mode_argmax", "decontaminate",
-    "dedup_components", "dedup_incremental", "dedup_levenshtein",
-    "dedup_span", "dedup_winnow", "embedding_centroids",
-    "events_hopping", "events_range_window", "events_session_window",
-}
-
-# CORRECTNESS_r09 recorded these 50 rows (all green, witnessed
-# post-final-commit at 11:02 vs last commit 10:30): the 18-name
-# _R9_FRONT + the 24 remaining stale r1/r2 re-witnesses + 4 new r9
-# gates + agg_approx/array_functions/correlated_min from R3.  The
-# r1/r2 tier is now FULLY drained; cumulative ever-witnessed 327/342.
-_WITNESSED_R9 = {
-    "agg_approx", "agg_median_twopass", "agg_quantile_cont",
-    "agg_quantile_multi", "agg_weighted_median", "array_functions",
-    "correlated_min", "events_concurrency", "events_interarrival",
-    "events_survival", "expr_null_safe_eq", "knn_quantized",
-    "layout_zorder", "ml_auc", "ml_calibration", "ml_pr_auc",
-    "pack_chunks", "pack_greedy", "pareto_frontier",
-    "pipeline_pretraining", "pivot_status_by_priority",
-    "profile_chisq", "profile_cramers", "profile_fingerprint",
-    "profile_gini", "profile_histogram", "profile_key_skew",
-    "profile_ks", "profile_lineitem", "profile_mannwhitney",
-    "profile_mutual_info", "q13_customer_distribution",
-    "q4_order_priority", "sample_curriculum", "sample_domain_cap",
-    "sample_dsir", "sample_interleave", "sample_mixture",
-    "sample_split", "sample_stratified", "sample_token_budget",
-    "streaming_dedup_rocksdb", "text_bpe_pairs",
-    "text_length_quantiles", "text_lm_score", "text_pii",
-    "text_quality_filter", "text_repetition", "text_tficf",
-    "window_distribution",
-}
-
-# CORRECTNESS_r10 recorded these 50 rows (all green, witnessed
-# post-final-commit at 16:24 vs last commit 15:50): the 19-name
-# _R10_FRONT + 31 stalest R3 re-witnesses.  Cumulative ever-witnessed
-# after r10: 342/356 (the 14 missing are exactly _R11_FRONT below).
-_WITNESSED_R10 = {
-    "ml_ndcg", "ml_gains", "ml_regression", "graph_modularity",
-    "profile_anova", "ml_kappa", "expr_variant", "sql_pipe",
-    "expr_collation", "sql_udf", "ml_confusion", "source_xml",
-    "spatial_dbscan", "embedding_rp", "streaming_semi_join",
-    "text_langid", "knn_lsh", "knn_beam", "dedup_embedding",
-    "q22_global_balance", "q6_forecast_revenue", "q7_nation_volume",
-    "decontaminate_bloom", "dedup_blocked", "dedup_rolling",
-    "embedding_pca", "events_funnel", "events_retention",
-    "events_time_rollup", "expr_null_funcs", "join_salted", "knn_ivf",
-    "map_functions", "multimodal_audio", "multimodal_frames",
-    "multimodal_jpeg", "multimodal_png", "pipeline_clean_corpus",
-    "profile_heavy_hitters", "q10_returned_items",
-    "q11_important_stock", "q12_shipmode", "q14_promo_effect",
-    "q15_top_supplier", "q16_parts_supplier", "q17_small_quantity",
-    "q18_large_orders", "q19_discounted_revenue",
-    "q20_supplier_part_volume", "q21_waiting_supplier",
-}
-
-# (The superseded 19-name round-10 front — the explicit half of the
-# r10 window — is retired: its names are the first 19 entries of
-# _WITNESSED_R10 above, which is the only live record _ordered()
-# needs.)
-
-_TIERS_STALEST_FIRST = (
-    _WITNESSED_R1R2, _WITNESSED_R3, _WITNESSED_R4, _WITNESSED_R5,
-    _WITNESSED_R6, _WITNESSED_R7, _WITNESSED_R8, _WITNESSED_R9,
-    _WITNESSED_R10,
-)
-_CHECKED_UNION = frozenset().union(*_TIERS_STALEST_FIRST)
-
-# Round-11 front: the 14 late-r10 registrations (the r10 verdict's
-# `_R11_DEFER` set — never driver-witnessed; each verified at sf0.01
-# AND sf0.001 in round 10 and independently re-verified by the r10
-# judge).  The 15 remaining stale _WITNESSED_R3 names + the 21
-# alphabetically-first effective _WITNESSED_R4 names fill the rest of
-# the driver's 50-row window, closing the ever-witnessed ledger at
-# 356/356 and leaving the stale ledger at R3: 0, R4: 28, R5: 46
-# (ROADMAP.md "Handoff to round 11").
-_R11_FRONT: list[str] = [
-    # round-10 batch 1: bidirectional stream-stream finalization
-    # (closes VERDICT r9 gap #3)
-    "streaming_full_outer_join",
-    # round-10 batch 2: Spark-4 dynamic-SQL + sugar surfaces
-    "sql_exec_immediate", "sql_group_by_all",
-    # round-10 batch 3: exact eval metrics (MCC, Brier)
-    "ml_mcc", "ml_brier",
-    # round-10 batch 4: OHLC bars, Tukey fences, deterministic
-    # mixture upsampling
-    "events_ohlc", "profile_tukey", "sample_poisson_upsample",
-    # round-10 batch 5: landmark closeness/harmonic centrality
-    "graph_closeness",
-    # round-10 batch 6: exact shape moments + quantized Holt smoothing
-    "profile_moments", "events_holt",
-    # round-10 batch 7: bounded-radius planar kNN join
-    "spatial_knn_join",
-    # round-10 batch 8: local-extrema screen + recency-decay sampling
-    "events_peaks", "sample_exponential_decay",
-]
-
-# Registered in round 11 and DEFERRED past the r11 witness window so
-# the window keeps its planned shape — same mechanism as r9's
-# _R10_DEFER / r10's _R11_DEFER.  These lead the ROUND-12 front.
-_R12_DEFER: list[str] = [
-    # round-11 batch 1: standalone recall@k for the ANN family
-    # (closes VERDICT r9 ask #6 / r10 ask #2)
-    "ml_recall_at_k", "ml_recall_panel",
-    # round-11 batch 2: expanding-ring kNN escalation (VERDICT r10
-    # ask #5)
-    "spatial_knn_expand",
-    # round-11 batch 3: robust profiling + calibration folds
-    "profile_mad", "ml_ece",
-    # round-11 batch 4: event-series co-movement + admission control
-    "events_rolling_corr", "events_rate_limit",
-    # round-11 batch 5: leakage-safe CV + lake-house schema evolution
-    "sample_group_kfold", "source_schema_evolution",
-    # round-11 batch 6: streaming admission control, corpus novelty
-    # ranking, ANN index auto-tuning sweep
-    "streaming_rate_limit", "text_ngram_novelty", "pipeline_lsh_tuning",
-    # round-11 batch 7: eval-by-slice AUC + quality-aware dedup
-    # survivor selection
-    "ml_auc_by_slice", "dedup_keep_best",
-    # round-11 batch 8: classifier-eval of langid + PERMISSIVE
-    # malformed-record CSV ingestion
-    "text_langid_confusion", "source_csv_malformed",
-    # round-11 batch 9: link prediction + distribution-shape screen
-    "graph_link_prediction", "profile_bimodality",
-    # round-11 batch 10: grouping-set provenance bitmask
-    "agg_grouping_id",
-    # round-11 batch 11: dense-series repair + seasonality screen
-    "events_interpolate", "events_acf",
-    # round-11 batch 12: threshold-sweep curve, fairness panel,
-    # first-hit ranking metric
-    "ml_threshold_sweep", "ml_fairness", "ml_mrr",
-    # round-11 batch 13: co-missingness panel + id-domain gap audit
-    "profile_null_pattern", "profile_id_gaps",
-    # round-11 batch 14: salt-stratified exact matching + compaction
-    # planner
-    "sample_matched_pairs", "layout_compaction_plan",
-    # round-11 batch 15: constellation acoustic fingerprint retrieval
-    "multimodal_fingerprint",
-    # round-11 batch 16: corpus-frequency boilerplate strip + Allen
-    # interval census
-    "text_boilerplate", "events_allen",
-    # round-11 batch 17: FD discovery + hysteresis burst segmentation
-    "profile_fd", "events_hysteresis",
-    # round-11 batch 18: degree assortativity + certified KMV
-    # quantile sketch
-    "graph_assortativity", "sketch_quantile",
-    # round-11 batch 19: MATCH_RECOGNIZE-style pattern automaton +
-    # systematic sampling
-    "events_pattern_match", "sample_systematic",
-    # round-11 batch 20: streaming MATCH_RECOGNIZE twin
-    "streaming_pattern_match",
-    # round-11 batch 21: KMV set-difference estimate
-    "sketch_kmv_diff",
-    # round-11 batch 22: global transitivity + B-cubed cluster eval
-    "graph_clustering_coeff", "ml_bcubed",
-    # round-11 batch 23: matched-pairs observational uplift
-    "events_uplift_matched",
-]
-
-
-def _ordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    front = {k: QUERIES[k] for k in _R11_FRONT if k in QUERIES}
-    unproven = {
-        k: v for k, v in QUERIES.items()
-        if k not in _CHECKED_UNION and k not in front
-        and k not in _R12_DEFER
-    }
-    # a name may sit in several tiers (re-witnessed later): its
-    # effective tier is the LATEST round that recorded it
-    seen: set[str] = set(front) | set(unproven)
-    by_staleness: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for i, tier in enumerate(_TIERS_STALEST_FIRST):
-        later = frozenset().union(*_TIERS_STALEST_FIRST[i + 1:]) \
-            if i + 1 < len(_TIERS_STALEST_FIRST) else frozenset()
-        for k in sorted(tier):
-            if k in QUERIES and k not in seen and k not in later:
-                by_staleness[k] = QUERIES[k]
-                seen.add(k)
-    deferred = {k: QUERIES[k] for k in _R12_DEFER if k in QUERIES}
-    return {**front, **unproven, **by_staleness, **deferred}
+def _records() -> dict[int, dict[str, dict]]:
+    """The committed CORRECTNESS records, keyed by round number."""
+    out = {}
+    for fname in os.listdir(_HERE):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(_HERE, fname)) as fh:
+                out[int(m.group(1))] = json.load(fh)
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ extended
     Spark-first operators).  Each callable takes (spark, sf_dir)."""
-    return _ordered()
+    return {k: QUERIES[k] for k in _stalest_first(QUERIES, _records())}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for every oracle-expressible query."""
-    order = _ordered()
-    return {k: ORACLES[k] for k in order if k in ORACLES}
+    return {k: ORACLES[k] for k in queries() if k in ORACLES}

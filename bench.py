@@ -142,11 +142,17 @@ def main() -> None:
     # full-registry ratio table survives even when stdout is truncated.
     # Subset spot-benches (SPARK_GRAFT_QUERIES) must NOT clobber the
     # full-registry record — the driver auto-commits dirty files.
+    # Each core count keeps its own record: the 32-core default
+    # (session.py) writes the legacy name, any other count a `_c{N}`
+    # sibling.
     if not subset:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        record = ("BENCH_FULL_LATEST.json" if cpus == "32"
+                  else f"BENCH_FULL_LATEST_c{cpus}.json")
         try:
             with open(
                 os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_FULL_LATEST.json"),
+                             record),
                 "w",
             ) as fh:
                 fh.write(full + "\n")

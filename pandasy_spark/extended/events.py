@@ -1070,8 +1070,11 @@ def markov_removal_effects(
     # CONSTRUCTION (<= variants x states^2 rows, independent of corpus
     # size), so the session's data-sized shuffle parallelism is pure
     # per-round scheduler overhead at ANY scale: scope these stages'
-    # shuffles to one partition (session.scoped_shuffle_partitions) —
-    # every eager pin below materializes inside the scope
+    # shuffles to one partition (session.scoped_shuffle_partitions).
+    # The lazy per-round pins of `v` stay inside the scope too: a lazy
+    # localCheckpoint is planned at the call (under AQE it also runs
+    # its shuffle stages then), so only each pin's final compute is
+    # deferred, with its partition count already fixed at one
     from ..session import scoped_shuffle_partitions
 
     with scoped_shuffle_partitions(spark, 1):
@@ -1135,9 +1138,9 @@ def markov_removal_effects(
             )
             # absorbing states keep their fixed values in every variant;
             # pin each round LAZILY — v is consumed once per round, so
-            # lazy pins chain the six bounded-grid rounds into the final
-            # job instead of paying an eager py4j checkpoint round trip
-            # per round (interleaved A/B at sf0.1: eager 6.04/7.06 vs
+            # a lazy pin skips the eager pin's separate count job per
+            # round; its shuffle stages still run at the call, inside
+            # the scope (interleaved A/B at sf0.1: eager 6.04/7.06 vs
             # lazy 5.72/6.15 min/med, identical output)
             v = (
                 stepped.filter(~F.col("state").isin(conv_state, "END"))
