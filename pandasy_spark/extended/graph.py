@@ -1,10 +1,27 @@
-"""Iterative graph analytics on DataFrames: PageRank.
+"""Iterative graph analytics on DataFrames: PageRank, HITS, label
+propagation, k-core, BFS, bounded shortest paths, SCC, landmark
+closeness, plus the one-pass graph metrics.
 
 No counterpart in the reference (its surface is relational —
 SURVEY.md §2); companion to the connected-components operator in
-``extended.dedup``.  Like that operator, the loop is a fixed chain of
+``extended.dedup``.  Like that operator, every loop is a fixed chain of
 joins + aggregates so Catalyst plans each round like any relational
-query, with ``localCheckpoint`` bounding lineage growth.
+query.  The iterative operators share three private round kernels:
+
+- :func:`_relax` — each round unions the per-node state with one
+  proposal per edge and keeps one min/max per node (label
+  propagation, weighted shortest paths, both SCC colorings);
+- :func:`_frontier` — the visited/frontier anti-join loop (BFS and
+  per-landmark closeness);
+- :func:`_pagerank` — the sparse incoming-mass iteration, with an
+  optional seed set for the personalized restart vector.
+
+Pin rule: a fixed-round loop pins (lazy ``localCheckpoint``) its state
+every ``_PIN_EVERY`` rounds and runs no convergence check; a loop that
+stops at its fixpoint pins every round and reads one one-row
+``(count, sum)`` aggregate per round.  :func:`_undirected` and
+:func:`_vertices` are the shared preambles (symmetrized pinned edge
+list; vertex set of an edge list).
 
 Determinism: ranks are kept in integer nano-units (BIGINT) and every
 update uses only integer floor-division and multiplication, so the
@@ -39,6 +56,203 @@ __all__ = [
 #: rank scale: 1.0 == 10^9 nano-units.
 SCALE = 1_000_000_000
 
+#: fixed-round loops pin their state every this many rounds, so the
+#: plan never grows by more than two rounds of joins + aggregates.
+_PIN_EVERY = 2
+
+
+def _vertices(e: DataFrame) -> DataFrame:
+    """``(node)``: the distinct endpoints of a two-column edge list."""
+    a, b = e.columns[:2]
+    return (
+        e.select(F.col(a).alias("node"))
+        .union(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _undirected(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """``(u, v)``: the distinct pairs of columns ``a``/``b`` stated in
+    both directions, pinned — every caller scans it more than once."""
+    e = edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
+    return e.union(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=False)
+
+
+def _relax(
+    state: DataFrame,
+    edges: DataFrame,
+    agg,
+    rounds: int,
+    offer=None,
+    converge: bool = False,
+) -> DataFrame:
+    """Bounded relaxation over ``state`` = ``(node, <value>)``: each
+    round, every edge ``(u, v, ...)`` offers ``v`` the value at ``u``
+    (or ``offer``, a Column over the joined edge + state row); the
+    offers are unioned with the state and ``agg`` (``F.min`` /
+    ``F.max``) keeps one value per node.  Offers only reach edge
+    endpoints, so a caller whose state covers every ``v`` gets the
+    same nodes back.
+
+    ``converge=False`` runs all ``rounds`` and pins every
+    ``_PIN_EVERY`` rounds.  ``converge=True`` pins every round and
+    stops once the one-row ``(count, sum)`` of the state repeats: for
+    a monotone ``agg`` an unchanged pair means an unchanged state (the
+    driver reads one row per round, never data).
+
+    Scale shape: per round one equi-join of the state against the
+    edge list on ``u`` (broadcast or shuffle-hash, AQE picks) and one
+    map-side-combined min/max aggregate on the node key.
+    """
+    val = state.columns[1]
+    offer = F.col(val) if offer is None else offer
+    prev = None
+    for i in range(1, rounds + 1):
+        offers = edges.join(state.withColumnRenamed("node", "u"), "u").select(
+            F.col("v").alias("node"), offer.alias(val)
+        )
+        state = (
+            state.unionByName(offers)
+            .groupBy("node")
+            .agg(agg(val).alias(val))
+        )
+        if converge or i % _PIN_EVERY == 0:
+            state = state.localCheckpoint(eager=False)
+        if converge:
+            cur = tuple(state.agg(F.count(F.lit(1)), F.sum(val)).first())
+            if cur == prev:
+                break
+            prev = cur
+    return state
+
+
+def _frontier(
+    edges: DataFrame, visited: DataFrame, key: list, max_hops: int
+) -> DataFrame:
+    """Breadth-first expansion of ``visited`` = ``(*key, dist)`` over
+    the edge list ``(u, v)``, out to ``max_hops``.  ``key`` ends in
+    ``"node"``; any leading columns (a landmark id) ride along, so
+    several searches share every join.  Round h joins the CURRENT
+    frontier (keys first reached at h-1) to the edges, dedups the
+    neighbours, anti-joins the visited set and stamps the survivors
+    ``dist = h``; the new keys pin every ``_PIN_EVERY`` rounds.  Each
+    round's work is proportional to the frontier's out-edges, not the
+    graph."""
+    frontier = visited.select(*key)
+    for h in range(1, max_hops + 1):
+        nbrs = (
+            edges.join(frontier.withColumnRenamed("node", "u"), "u")
+            .select(*key[:-1], F.col("v").alias("node"))
+            .distinct()
+        )
+        new = nbrs.join(visited, key, "left_anti").select(
+            *key, F.lit(h).cast("int").alias("dist")
+        )
+        if h % _PIN_EVERY == 0:
+            new = new.localCheckpoint(eager=False)
+        visited = visited.unionByName(new)
+        frontier = new.select(*key)
+    return visited
+
+
+def _pagerank(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    iterations: int,
+    damping_pct: int,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The integer PageRank iteration behind :func:`pagerank` (uniform
+    restart, ``seeds=None``) and :func:`personalized_pagerank` (restart
+    on the ``(node)`` frame ``seeds`` only); ``(node, rank_nano)``."""
+    if iterations < 0:
+        raise ValueError("iterations must be >= 0")
+    if not 0 <= damping_pct <= 100:
+        raise ValueError("damping_pct must be in [0, 100]")
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).distinct()
+    if iterations > 1:
+        # the edge list is scanned every round: materialize the
+        # distinct ONCE instead of re-deriving it from the source
+        # (and re-shuffling) per iteration
+        e = e.localCheckpoint(eager=False)
+    nodes = _vertices(e)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    if iterations > 1:
+        # the out-degree table feeds every round's join: pin it so
+        # rounds after the first don't recompute the aggregate
+        deg = deg.localCheckpoint(eager=False)
+    base = (100 - damping_pct) * SCALE // 100
+    if seeds is None:
+        restart, start = F.lit(base).cast("long"), F.lit(SCALE).cast("long")
+    else:
+        # the seed flag rides a broadcast join wherever rank is
+        # reconstructed; a node absent from it restarts with 0
+        flag = F.broadcast(
+            seeds.distinct().withColumn("__seed", F.lit(1))
+        )
+        seed = F.coalesce(F.col("__seed"), F.lit(0))
+        restart, start = seed * F.lit(base), (seed * F.lit(SCALE)).cast("long")
+
+    def seeded(df, key, how):
+        if seeds is None:
+            return df
+        return df.join(flag.withColumnRenamed("node", key), key, how)
+
+    # iterate SPARSE on the incoming-mass table: rank(v) is the pure
+    # function restart(v) + (damping·incoming(v)) div 100 of it, and a
+    # node absent from `incoming` has exactly rank == restart(v), which
+    # the contribution join below reconstructs via coalesce — so the
+    # dense per-round zero-fill join against the full vertex set is
+    # deferred to the final projection (one |V|-shuffle saved per
+    # round, bit-identical ranks; guide §2.4).  Both later-round joins
+    # are LEFT: a seed with no incoming still carries its restart
+    # mass, a non-seed with incoming carries its share.
+    rank_expr = (
+        restart + F.expr(f"({damping_pct} * coalesce(incoming, 0L)) div 100")
+    ).alias("rank_nano")
+    incoming = None
+    for i in range(1, iterations + 1):
+        if incoming is None:
+            # round one: only nodes holding start rank (every source,
+            # or the seeds) send mass
+            ranked = seeded(e, "src", "inner").join(deg, "src").select(
+                "dst", start.alias("rank_nano"), "outdeg"
+            )
+        else:
+            ranked = (
+                seeded(
+                    e.join(
+                        incoming.withColumnRenamed("node", "src"), "src", "left"
+                    ),
+                    "src",
+                    "left",
+                )
+                .join(deg, "src")
+                .select("dst", rank_expr, "outdeg")
+            )
+        incoming = (
+            ranked.select(
+                F.col("dst").alias("node"),
+                F.expr("rank_nano div outdeg").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("incoming"))
+        )
+        if i % _PIN_EVERY == 0:
+            incoming = incoming.localCheckpoint(eager=False)
+    if incoming is None:
+        return seeded(nodes, "node", "left").select(
+            "node", start.alias("rank_nano")
+        )
+    return seeded(nodes.join(incoming, "node", "left"), "node", "left").select(
+        "node", rank_expr
+    )
+
 
 def pagerank(
     edges: DataFrame,
@@ -46,7 +260,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 4,
     damping_pct: int = 85,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -67,69 +280,10 @@ def pagerank(
     is small, shuffle-hash otherwise, Spark's AQE picks — followed by
     one map-side-combined sum on ``dst``.  k iterations = k
     join+agg rounds, O(|E|) each; ``localCheckpoint`` every
-    ``checkpoint_every`` rounds keeps the plan from growing
-    superlinearly (same discipline as connected components,
-    extended/dedup.py).
+    ``_PIN_EVERY`` rounds keeps the plan from growing superlinearly
+    (same discipline as connected components, extended/dedup.py).
     """
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    if iterations > 1:
-        # the edge list is scanned every round: materialize the
-        # distinct ONCE instead of re-deriving it from the source
-        # (and re-shuffling) per iteration
-        e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    if iterations > 1:
-        # the out-degree table feeds every round's join: pin it so
-        # rounds after the first don't recompute the aggregate
-        deg = deg.localCheckpoint(eager=False)
-    base = (100 - damping_pct) * SCALE // 100
-    # iterate SPARSE on the incoming-mass table: rank(v) is the pure
-    # function base + (damping·incoming(v)) div 100 of it, and a node
-    # absent from `incoming` has exactly rank == base, which the
-    # contribution join below reconstructs via coalesce — so the dense
-    # per-round zero-fill join against the full vertex set is deferred
-    # to the final projection (one |V|-shuffle saved per round,
-    # bit-identical ranks; guide §2.4)
-    rank_expr = (
-        F.lit(base).cast("long")
-        + F.expr(f"({damping_pct} * coalesce(incoming, 0L)) div 100")
-    ).alias("rank_nano")
-    incoming = None
-    for i in range(iterations):
-        if incoming is None:
-            ranked = e.join(deg, "src").select(
-                "dst", F.lit(SCALE).cast("long").alias("rank_nano"), "outdeg"
-            )
-        else:
-            ranked = (
-                e.join(incoming.withColumnRenamed("node", "src"), "src", "left")
-                .join(deg, "src")
-                .select("dst", rank_expr, "outdeg")
-            )
-        incoming = (
-            ranked.select(
-                F.col("dst").alias("node"),
-                F.expr("rank_nano div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("incoming"))
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            incoming = incoming.localCheckpoint(eager=False)
-    if incoming is None:
-        return nodes.select("node", F.lit(SCALE).cast("long").alias("rank_nano"))
-    return nodes.join(incoming, "node", "left").select("node", rank_expr)
+    return _pagerank(edges, src_col, dst_col, iterations, damping_pct)
 
 
 def cooccurrence_edges(
@@ -262,7 +416,6 @@ def label_propagation(
     src_col: str = "x",
     dst_col: str = "y",
     rounds: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Bounded-round min-label propagation over an undirected edge
     list: every node starts labeled with its own id; each round a node
@@ -275,41 +428,22 @@ def label_propagation(
     Integer min-only updates: bit-identical across engines, so a SQL
     oracle can state the unrolled rounds (``graph_label_prop`` gate).
 
-    Scale shape: each round is one equi-join of the |V|-row label
-    table against the (symmetrized) edge list plus a map-combined min
-    aggregate — same k x (join+agg) story as :func:`pagerank`, with
-    ``localCheckpoint`` bounding lineage.
+    Scale shape: each round is one :func:`_relax` step — one
+    equi-join of the |V|-row label table against the (symmetrized)
+    edge list plus a map-combined min aggregate, the same k x
+    (join+agg) story as :func:`pagerank`.  The symmetrized list's
+    ``v`` set equals its ``u`` set, so every proposal lands on a
+    labelled node.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).distinct()
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if rounds > 1:
-        sym = sym.localCheckpoint(eager=False)
+    sym = _undirected(edges, src_col, dst_col)
     labels = (
         sym.select(F.col("u").alias("node")).distinct()
         .select("node", F.col("node").alias("label"))
     )
-    for i in range(rounds):
-        incoming = (
-            sym.join(labels.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(incoming, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-            )
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
-    return labels
+    # a NULL id matches no join key, so it keeps its NULL label
+    return _relax(labels, sym.filter(F.col("v").isNotNull()), F.min, rounds)
 
 
 def kcore(
@@ -318,7 +452,6 @@ def kcore(
     dst_col: str = "y",
     k: int = 2,
     rounds: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Bounded-round k-core peeling over an undirected edge list (each
     edge stated once, either direction): per round, drop every node
@@ -341,21 +474,14 @@ def kcore(
     """
     if k < 0 or rounds < 0:
         raise ValueError("k >= 0 and rounds >= 0 required")
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).distinct()
-    sym = e.unionAll(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    if rounds > 0:
-        sym = sym.localCheckpoint(eager=False)
-    for i in range(rounds):
+    sym = _undirected(edges, src_col, dst_col)
+    for i in range(1, rounds + 1):
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
         good = deg.filter(F.col("c") >= k).select("u")
         sym = sym.join(good, "u", "left_semi").join(
             good.withColumnRenamed("u", "v"), "v", "left_semi"
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if i % _PIN_EVERY == 0:
             sym = sym.localCheckpoint(eager=False)
     return (
         sym.groupBy("u")
@@ -374,7 +500,6 @@ def bfs_hops(
     dst_col: str = "y",
     node_col: str = "node",
     max_hops: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source breadth-first search over an undirected edge list:
     the minimum hop distance from ANY source node, out to
@@ -399,29 +524,12 @@ def bfs_hops(
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).distinct()
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if max_hops > 0:
-        sym = sym.localCheckpoint(eager=False)
     visited = sources.select(
         F.col(node_col).alias("node"), F.lit(0).cast("int").alias("dist")
     ).distinct()
-    frontier = visited.select("node")
-    for h in range(1, max_hops + 1):
-        nbrs = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-        )
-        new = nbrs.join(visited, "node", "left_anti").select(
-            "node", F.lit(h).cast("int").alias("dist")
-        )
-        if checkpoint_every and h % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=False)
-        visited = visited.unionByName(new)
-        frontier = new.select("node")
+    visited = _frontier(
+        _undirected(edges, src_col, dst_col), visited, ["node"], max_hops
+    )
     return visited.select(
         F.col("node").cast("long").alias("node"),
         F.col("dist").cast("int").alias("dist"),
@@ -436,7 +544,6 @@ def sssp(
     weight_col: str = "w",
     node_col: str = "node",
     rounds: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths over an undirected edge
     list, bounded to paths of at most ``rounds`` edges — distributed
@@ -470,27 +577,11 @@ def sssp(
     ).groupBy("u", "v").agg(F.min("w").alias("w"))
     sym = e.union(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
-    if rounds > 0:
-        sym = sym.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     dist = sources.select(
         F.col(node_col).alias("node"), F.lit(0).cast("long").alias("dist")
     ).distinct()
-    for h in range(1, rounds + 1):
-        proposals = (
-            sym.join(dist.withColumnRenamed("node", "u"), "u")
-            .select(
-                F.col("v").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(proposals)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if checkpoint_every and h % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=False)
+    dist = _relax(dist, sym, F.min, rounds, F.col("dist") + F.col("w"))
     return dist.select(
         F.col("node").cast("long").alias("node"),
         F.col("dist").cast("long").alias("dist"),
@@ -520,14 +611,9 @@ def neighbor_jaccard(
     """
     if min_common < 1:
         raise ValueError("min_common must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).distinct()
     # pinned: the symmetrized adjacency feeds both wedge-join legs AND
     # the degree aggregate (guide §2.4)
-    adj = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    adj = _undirected(edges, src_col, dst_col)
     a, b = adj.alias("a"), adj.alias("b")
     common = (
         a.join(
@@ -598,10 +684,11 @@ def scc(
     ``rounds`` must be >= the forward diameter of the graph and
     ``outer_rounds`` >= the longest root-chain in the condensation;
     both are UPPER bounds — max-label propagation is monotone (labels
-    only grow), so a one-row ``sum(label)`` checksum per step detects
-    the fixpoint exactly and exits early (the bounded-collect
-    convergence pattern from connected components: the driver sees a
-    single BIGINT per round, never data).  An IN-PLAN ``raise_error``
+    only grow), so both loops run :func:`_relax` to convergence: a
+    one-row ``(count, sum)`` checksum per step detects the fixpoint
+    exactly and exits early (the bounded-collect convergence pattern
+    from connected components: the driver sees one row per round,
+    never data).  An IN-PLAN ``raise_error``
     guard fires if any node is still unsettled at the end, so an
     under-provisioned bound can never silently return a wrong
     partition (the merge-uniqueness-guard pattern).
@@ -624,37 +711,17 @@ def scc(
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
     )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _vertices(e).localCheckpoint(eager=False)
     e = e.localCheckpoint(eager=False)
     settled = None
     for _ in range(outer_rounds):
-        colors = nodes.select("node", F.col("node").alias("color"))
-        prev_sum = None
-        for h in range(rounds):
-            prop = (
-                e.join(
-                    colors.select(
-                        F.col("node").alias("u"), F.col("color").alias("cu")
-                    ),
-                    "u",
-                )
-                .select(F.col("v").alias("node"), F.col("cu").alias("color"))
-            )
-            colors = (
-                colors.unionByName(prop)
-                .groupBy("node")
-                .agg(F.max("color").alias("color"))
-                .localCheckpoint(eager=False)
-            )
-            cur = colors.agg(F.sum("color")).first()[0]
-            if cur == prev_sum:
-                break
-            prev_sum = cur
+        colors = _relax(
+            nodes.select("node", F.col("node").alias("color")),
+            e,
+            F.max,
+            rounds,
+            converge=True,
+        )
         same = (
             e.join(
                 colors.select(
@@ -672,34 +739,16 @@ def scc(
             .select("u", "v")
             .localCheckpoint(eager=False)
         )
-        marked = colors.filter(F.col("node") == F.col("color")).select(
-            "node", F.col("color").alias("scc_id")
+        # backward along the reversed same-color edges, from the roots
+        marked = _relax(
+            colors.filter(F.col("node") == F.col("color")).select(
+                "node", F.col("color").alias("scc_id")
+            ),
+            same.select(F.col("v").alias("u"), F.col("u").alias("v")),
+            F.max,
+            rounds,
+            converge=True,
         )
-        prev_mark = None
-        for h in range(rounds):
-            prop = (
-                same.join(
-                    marked.select(
-                        F.col("node").alias("v"), "scc_id"
-                    ),
-                    "v",
-                )
-                .select(F.col("u").alias("node"), "scc_id")
-            )
-            marked = (
-                marked.unionByName(prop)
-                .groupBy("node")
-                .agg(F.max("scc_id").alias("scc_id"))
-                .localCheckpoint(eager=False)
-            )
-            cur = tuple(
-                marked.agg(
-                    F.count("*"), F.sum("scc_id")
-                ).first()
-            )
-            if cur == prev_mark:
-                break
-            prev_mark = cur
         settled = (
             marked if settled is None else settled.unionByName(marked)
         ).localCheckpoint(eager=False)
@@ -761,85 +810,13 @@ def personalized_pagerank(
     Output: ``(node, rank_nano)`` for every node reachable in the
     edge list's vertex set.
     """
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    if iterations > 1:
-        e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
-    base = (100 - damping_pct) * SCALE // 100
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    if iterations > 1:
-        deg = deg.localCheckpoint(eager=False)
-    # iterate SPARSE (same argument as :func:`pagerank`): rank(v) is
-    # the pure function seed(v)·base + (damping·incoming(v)) div 100,
-    # a node absent from `incoming` with seed 0 has exactly rank 0 and
-    # contributes nothing, so the per-round dense fill over the vertex
-    # set is deferred to the final projection.  The seed flag rides a
-    # broadcast join wherever rank is reconstructed.
-    seed_flag = F.broadcast(sd.withColumn("__seed", F.lit(1)))
-    rank_expr = (
-        F.coalesce(F.col("__seed"), F.lit(0)) * F.lit(base)
-        + F.expr(f"({damping_pct} * coalesce(incoming, 0L)) div 100")
-    ).cast("long").alias("rank_nano")
-    incoming = None
-    for i in range(iterations):
-        if incoming is None:
-            ranked = (
-                e.join(
-                    seed_flag.withColumnRenamed("node", "src"), "src"
-                )
-                .join(deg, "src")
-                .select(
-                    "dst",
-                    F.lit(SCALE).cast("long").alias("rank_nano"),
-                    "outdeg",
-                )
-            )
-        else:
-            # both joins LEFT: a seed with no incoming still carries
-            # base rank, a non-seed with incoming carries its share,
-            # and a row absent from both reconstructs exactly rank 0
-            ranked = (
-                e.join(
-                    incoming.withColumnRenamed("node", "src"), "src", "left"
-                )
-                .join(
-                    seed_flag.withColumnRenamed("node", "src"), "src", "left"
-                )
-                .join(deg, "src")
-                .select("dst", rank_expr, "outdeg")
-            )
-        incoming = (
-            ranked.select(
-                F.col("dst").alias("node"),
-                F.expr("rank_nano div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("incoming"))
-        )
-        if (i + 1) % 2 == 0:
-            incoming = incoming.localCheckpoint(eager=False)
-    if incoming is None:
-        return nodes.join(seed_flag, "node", "left").select(
-            "node",
-            (F.coalesce(F.col("__seed"), F.lit(0)) * F.lit(SCALE))
-            .cast("long")
-            .alias("rank_nano"),
-        )
-    return (
-        nodes.join(incoming, "node", "left")
-        .join(seed_flag, "node", "left")
-        .select("node", rank_expr)
+    return _pagerank(
+        edges,
+        src_col,
+        dst_col,
+        iterations,
+        damping_pct,
+        seeds.select(F.col(seed_col).alias("node")),
     )
 
 
@@ -874,12 +851,7 @@ def hits(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct().localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _vertices(e).localCheckpoint(eager=False)
     hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
     auth = None
     # iterate SPARSE: a node absent from `auth`/`hub` carries an exact
@@ -888,7 +860,7 @@ def hits(
     # the final projection — two fewer node-sized shuffle joins per
     # round for bit-identical scores (guide §2.4: remove shuffles
     # outright)
-    for i in range(iterations):
+    for i in range(1, iterations + 1):
         auth = (
             e.join(hub.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -899,7 +871,7 @@ def hits(
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("auth").cast("long").alias("hub"))
         )
-        if (i + 1) % 2 == 0:
+        if i % _PIN_EVERY == 0:
             hub = hub.localCheckpoint(eager=False)
             auth = auth.localCheckpoint(eager=False)
     return (
@@ -1013,7 +985,6 @@ def closeness_from_landmarks(
     dst_col: str = "y",
     node_col: str = "node",
     max_hops: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Hop-bounded closeness + harmonic centrality for a LANDMARK set
     — the standard scale posture for centrality on big graphs: exact
@@ -1043,31 +1014,17 @@ def closeness_from_landmarks(
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).distinct()
-    sym = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
     visited = landmarks.select(
         F.col(node_col).alias("src"),
         F.col(node_col).alias("node"),
         F.lit(0).cast("int").alias("dist"),
     ).distinct()
-    frontier = visited.select("src", "node")
-    for h in range(1, max_hops + 1):
-        nbrs = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select("src", F.col("v").alias("node"))
-            .distinct()
-        )
-        new = nbrs.join(
-            visited, ["src", "node"], "left_anti"
-        ).select("src", "node", F.lit(h).cast("int").alias("dist"))
-        if checkpoint_every and h % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=False)
-        visited = visited.unionByName(new)
-        frontier = new.select("src", "node")
+    visited = _frontier(
+        _undirected(edges, src_col, dst_col),
+        visited,
+        ["src", "node"],
+        max_hops,
+    )
     reached = visited.filter(F.col("dist") > 0)
     agg = reached.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),

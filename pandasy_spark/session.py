@@ -22,6 +22,24 @@ __all__ = ["get_spark", "scoped_shuffle_partitions", "DEFAULT_SF_DIR"]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# the directory that holds the ``pandasy_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _ship_package_root(spark: SparkSession) -> SparkSession:
+    """Put the package root on the Python workers' ``PYTHONPATH``.
+
+    UDF bodies import ``pandasy_spark`` inside the worker, which would
+    otherwise find it only through the process's working directory.
+    PySpark sends ``SparkContext.environment`` with every Python
+    function it plans, and Spark puts that ``PYTHONPATH`` between its
+    own worker path and the launching process's ``PYTHONPATH``."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
+    return spark
+
 
 def get_spark(
     app_name: str = "pandasy-spark",
@@ -54,7 +72,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    return _ship_package_root(builder.getOrCreate())
 
 
 class scoped_shuffle_partitions:
@@ -95,7 +113,8 @@ class scoped_shuffle_partitions:
 
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable semantics configs to a
-    session we did not create (e.g. the driver's)."""
+    session we did not create (e.g. the driver's), and ship the
+    package root to its Python workers."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -103,4 +122,4 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-    return spark
+    return _ship_package_root(spark)

@@ -106,3 +106,22 @@ def make_rand_df(size: int, seed: int = 0, **cols: Any) -> pd.DataFrame:
             s[idx] = None
         data[name] = s
     return pd.DataFrame(data)
+
+
+#: Jobs each iterative graph gate runs from construction through a noop
+#: write (sf0.001, ``local[4]``, 4 shuffle partitions, job group counted
+#: with ``statusTracker().getJobIdsForGroup``, scans memoized first), as
+#: run by the per-operator round loops before they shared kernels;
+#: graph_scc reads 47 or 48 from run to run.  Budgets may only go down.
+GRAPH_GATE_JOBS = {
+    "text_textrank": 13,
+    "graph_pagerank": 15,
+    "graph_ppr": 21,
+    "graph_hits": 22,
+    "graph_label_prop": 11,
+    "graph_kcore": 14,
+    "graph_bfs": 25,
+    "graph_sssp": 16,
+    "graph_closeness": 26,
+    "graph_scc": 48,
+}

@@ -575,7 +575,7 @@ def test_fuzz_pagerank_vs_reference(spark):
         it = 1 + seed % 4
         got = {
             r["node"]: r["rank_nano"]
-            for r in pagerank(df, iterations=it, checkpoint_every=1).collect()
+            for r in pagerank(df, iterations=it).collect()
         }
         assert got == _pagerank_numpy(edges, it), seed
 

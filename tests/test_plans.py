@@ -5,6 +5,7 @@ paths, TakeOrderedAndProject top-k)."""
 import pytest
 
 from pandasy_spark.workload import QUERIES
+from tests.helpers import GRAPH_GATE_JOBS
 
 
 def _plan(spark, sf_dir, name) -> str:
@@ -107,6 +108,23 @@ def test_multimodal_frames_is_arrow_batched(spark, sf_dir):
     # intended Python boundary: exactly one Arrow-batched MapInPandas
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_plan_audit_subset_no_cartesian_or_row_python(spark, sf_dir):
+    """Default-tier slice of the fleet audit below: the iterative graph
+    gates plus every 20th registry name, a fixed deterministic set."""
+    names = sorted(set(GRAPH_GATE_JOBS) | set(sorted(QUERIES)[::20]))
+    offenders = {}
+    for name in names:
+        plan = _plan(spark, sf_dir, name)
+        bad = [
+            tag
+            for tag in ("CartesianProduct", "BatchEvalPython")
+            if tag in plan
+        ]
+        if bad:
+            offenders[name] = bad
+    assert not offenders, offenders
 
 
 @pytest.mark.slow

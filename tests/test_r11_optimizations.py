@@ -75,6 +75,12 @@ def test_ppr_seed_base_persists_without_incoming(spark):
     # node 3 round 2: fed by node 2's ROUND-1 rank = d*SCALE div 100
     assert got[3] == 85 * (85 * SCALE // 100) // 100
     assert set(got) == {1, 2, 3}
+    # zero iterations: the start vector, SCALE on seeds and 0 elsewhere
+    got0 = {
+        r["node"]: r["rank_nano"]
+        for r in personalized_pagerank(e, seeds, iterations=0).collect()
+    }
+    assert got0 == {1: SCALE, 2: 0, 3: 0}
 
 
 def test_hits_dense_output_after_sparse_rounds(spark):

@@ -97,6 +97,12 @@ def test_label_propagation_bounded_rounds(spark):
         for r in label_propagation(df, rounds=4).collect()
     }
     assert all(l4[n] == 1 for n in (1, 2, 3, 4, 5))
+    # zero rounds: every node keeps its own id
+    l0 = {
+        r["node"]: r["label"]
+        for r in label_propagation(df, rounds=0).collect()
+    }
+    assert l0 == {n: n for n in (1, 2, 3, 4, 5, 10, 11)}
     with pytest.raises(ValueError):
         label_propagation(df, rounds=-1)
 

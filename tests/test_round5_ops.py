@@ -78,6 +78,9 @@ def test_kcore_hand_graph(spark):
     df = spark.createDataFrame(edges, "x long, y long")
     out = {r["node"]: r["degree"] for r in kcore(df, k=2, rounds=2).collect()}
     assert out == {1: 2, 2: 2, 3: 2}
+    # zero rounds peel nothing: the input degrees
+    out0 = {r["node"]: r["degree"] for r in kcore(df, k=2, rounds=0).collect()}
+    assert out0 == {1: 3, 2: 2, 3: 2, 4: 1}
     # k=3: the triangle dies too (no node reaches degree 3 once 4 drops)
     assert kcore(df, k=3, rounds=2).count() == 0
     # rounds matter: a 4-chain peels end-in (one round leaves 2-3)

@@ -13,6 +13,7 @@ from pandasy_spark.extended.sketches import (
     hll_merge,
     hll_sketch,
 )
+from tests.helpers import GRAPH_GATE_JOBS
 
 
 def _edges(spark, pairs):
@@ -448,6 +449,31 @@ def test_quantile_gates_one_order_stats_pass(spark, sf_dir, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs <= 15, n_jobs
+
+
+@pytest.mark.parametrize("name", sorted(GRAPH_GATE_JOBS))
+def test_graph_gates_job_budget(spark, sf_dir, name):
+    """The iterative graph gates share their round kernels and pin
+    cadence: none may run more jobs, from construction through a noop
+    write, than its budget in ``tests.helpers.GRAPH_GATE_JOBS``.  The
+    scans are memoized first: a session's first read of a table runs
+    one schema job, which would make the count depend on test order."""
+    from pandasy_spark.sources import TABLES, load_table
+    from pandasy_spark.workload import QUERIES
+
+    for t in TABLES:
+        load_table(spark, sf_dir, t)
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= GRAPH_GATE_JOBS[name], n_jobs
 
 
 def test_chi_square_known_value(spark):

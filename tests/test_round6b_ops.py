@@ -253,6 +253,9 @@ def test_sssp_round_bound_and_parallel_edge_min(spark):
     assert got == {1: 0, 2: 4}
     got3 = {r["node"]: r["dist"] for r in sssp(e, src, rounds=2).collect()}
     assert got3 == {1: 0, 2: 4, 3: 5}
+    # zero rounds: the sources alone, at distance 0
+    got0 = {r["node"]: r["dist"] for r in sssp(e, src, rounds=0).collect()}
+    assert got0 == {1: 0}
 
 
 # ------------------------------------------------------- radius join

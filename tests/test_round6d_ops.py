@@ -159,6 +159,18 @@ def test_scc_long_cycle_needs_rounds(spark):
     cyc = [(i, i + 1) for i in range(1, 6)] + [(6, 1)]
     m = _scc_map(scc(_edges(spark, cyc), rounds=8, outer_rounds=2))
     assert set(m.values()) == {6}
+    # the cycle reaches its fixpoint in ~6 steps: a bound of 100 must
+    # exit early (every step runs at least one job, so running the
+    # bound out would take >= 100 jobs in the forward loop alone)
+    sc = spark.sparkContext
+    sc.setJobGroup("scc-early-exit", "scc-early-exit")
+    try:
+        m = _scc_map(scc(_edges(spark, cyc), rounds=100, outer_rounds=2))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(m.values()) == {6}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("scc-early-exit"))
+    assert n_jobs < 100, n_jobs
 
 
 # ------------------------------------------------- csv corrupt keep

@@ -81,3 +81,34 @@ def test_witness_order_fronts_unwitnessed_gates():
     # order, breaks every tie
     order = e._stalest_first(["e", "c", "a", "b", "d"], records)
     assert order == ["b", "d", "a", "e", "c"]
+
+
+def test_udf_gate_runs_outside_repo_root(sf_dir, tmp_path):
+    """UDF-based gates import pandasy_spark inside the Python worker: a
+    session built the way the driver builds one, in a process started
+    outside the repo root, must still run them."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "import __spark_entry__ as e\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        f"rows = e.queries()['multimodal_bmp'](spark, {sf_dir!r}).collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 200" in out.stdout, out.stdout[-3000:]
