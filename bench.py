@@ -4,6 +4,22 @@ local[$SPARK_GRAFT_CPUS]; print ONE JSON line with per-query seconds.
 
 Each query is forced through a `noop` sink so the full plan executes
 (a bare count() would let Catalyst prune the projections away).
+
+Next to the per-query best wall in `queries`, the full line and the
+full record carry `layers`: per query, `construct_s` (building the
+DataFrame, including any jobs the build runs) and `exec_s` (the noop
+write) of the run whose wall is kept, so the two add up to that wall
+to rounding; and `construct_jobs`, `jobs` (construct plus exec),
+`stages` and `tasks` of the query's last run, when the scans it reads
+are already memoized.  Jobs are counted through public APIs only:
+each run builds under job group `<name>:construct` and writes under
+`<name>:exec`, read back through `statusTracker()`
+(`perfbench.tracing.JobCounter`); the group calls and the reads sit
+outside the timed window.  Streaming micro-batch jobs run under their
+streaming query's own job group, so they are not counted.
+
+A/B a change on a few queries by running the same subset in each
+checkout, alternating:  SPARK_GRAFT_QUERIES=a,b python bench.py
 """
 
 from __future__ import annotations
@@ -17,30 +33,30 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pandasy_spark.session import get_spark  # noqa: E402
 from pandasy_spark.workload import QUERIES  # noqa: E402
-
-# Every registry query gets a bench row: derive the list from the
-# registry itself so a new operator can never ship without sf0.1
-# timing evidence (r4 verdict item #1 — 14 queries once had none).
-# BENCH_EXCLUDE documents the only legitimate reason to skip one:
-# a query whose gate form cannot run at sf0.1 (none currently).
-BENCH_EXCLUDE: set[str] = set()
-
-BENCH_QUERIES = [q for q in QUERIES if q not in BENCH_EXCLUDE]
+from perfbench.tracing import JobCounter  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # optional subset (comma-separated) for spot-benches, e.g. the
-    # sf1.0 nonlinearity check in scripts_scale.py
+    # optional subset (comma-separated) for spot-benches and A/Bs, e.g.
+    # the sf1.0 nonlinearity probe in scripts_scale.py; without one,
+    # every registry query gets a row, so a new operator can never ship
+    # without timing evidence
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
     bench_queries = (
         [q.strip() for q in subset.split(",") if q.strip()]
         if subset
-        else BENCH_QUERIES
+        else list(QUERIES)
     )
     spark = get_spark("pandasy-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    # jobs between timed runs (warm-up, hygiene) go to their own group,
+    # never to a query's, and never ungrouped: JobCounter charges new
+    # ungrouped jobs to the next query it reads
+    sc.setJobGroup("bench", "between queries")
+    counter = JobCounter(sc)
 
     # warm the JVM + parquet footers with a trivial action
     QUERIES["q1_pricing_summary"](spark, sf_dir).count()
@@ -68,6 +84,7 @@ def main() -> None:
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
     partial_times: dict[str, float] = {}
+    layers: dict[str, dict] = {}
 
     def _cleanup() -> None:
         # Session hygiene BETWEEN queries (never between a query's own
@@ -92,12 +109,25 @@ def main() -> None:
 
     for name in bench_queries:
         best = float("inf")
+        construct_group, exec_group = f"{name}:construct", f"{name}:exec"
+        counted: set[int] = set()  # job ids of this query's earlier runs
         try:
             for run in range(3):
+                sc.setJobGroup(construct_group, name)
                 start = time.perf_counter()
                 df = QUERIES[name](spark, sf_dir)
+                built = time.perf_counter()
+                sc.setJobGroup(exec_group, name)
+                exec_start = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
+                end = time.perf_counter()
+                construct_s, exec_s = built - start, end - exec_start
+                if construct_s + exec_s < best:
+                    best = construct_s + exec_s
+                    best_split = (construct_s, exec_s)
+                construct_ids = counter.jobs(construct_group) - counted
+                exec_ids = counter.jobs(exec_group) - counted
+                counted |= construct_ids | exec_ids
                 # heavyweights get best-of-2, not best-of-1: the
                 # single-run streaming machinery floors ride state-store
                 # maintenance timer alignment (streaming_outer_join read
@@ -119,8 +149,18 @@ def main() -> None:
                 partial_times[name] = round(best, 3)
             continue
         finally:
+            sc.setJobGroup("bench", "between queries")
             _cleanup()
         times[name] = round(best, 3)
+        stages, tasks = counter.stages_tasks(construct_ids | exec_ids)
+        layers[name] = {
+            "construct_s": round(best_split[0], 3),
+            "exec_s": round(best_split[1], 3),
+            "construct_jobs": len(construct_ids),
+            "jobs": len(construct_ids) + len(exec_ids),
+            "stages": stages,
+            "tasks": tasks,
+        }
 
     total = round(sum(times.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -129,6 +169,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": times,
+        "layers": layers,
         "sf": sf_val,
     }
     if errors:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 __all__ = ["materialize_concurrently"]
@@ -33,22 +34,16 @@ def materialize_concurrently(
 
     2-4 jobs in flight is plenty (guide §2.6): enough to fill another
     job's straggler tail, not so many that they fight for cores.  Job
-    descriptions/groups are thread-local in Spark, so concurrent jobs
-    stay correctly labelled.
+    groups and descriptions are thread-local in Spark, and a plain pool
+    thread starts with none, so each pin runs through
+    ``inheritable_thread_target``: it inherits the calling thread's
+    local properties and job tags, and its jobs stay in the caller's
+    job group.
     """
-    import os
-
-    # explicit flag parse: "", "0" and "false" mean concurrency ON —
-    # a bare `SPARK_GRAFT_NO_CONCURRENCY=0` must not silently disable
-    # it (A/B-measurement footgun, r11 advice)
-    no_conc = os.environ.get("SPARK_GRAFT_NO_CONCURRENCY", "").lower() not in (
-        "", "0", "false",
-    )
-    if len(dfs) <= 1 or no_conc:
-        # measurement escape hatch: pin sequentially (same frames,
-        # same results) so overlap-vs-serial can be A/B'd in isolation
+    if len(dfs) <= 1:
         return [df.localCheckpoint(eager=True) for df in dfs]
 
+    @inheritable_thread_target(dfs[0].sparkSession)
     def _pin(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
 

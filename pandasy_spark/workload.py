@@ -18425,8 +18425,7 @@ def ml_recall_panel(spark, sf_dir):
     # A/B); after the r12 beam array-fold rewrite the paired A/B reads
     # sequential 13.4 min / 14.1 med vs concurrent 12.6 min / 12.8 med
     # (guide §2.6 — overlap jobs that are already serialized by
-    # internal checkpoints).  SPARK_GRAFT_NO_CONCURRENCY=1 restores
-    # the sequential pins for A/B.
+    # internal checkpoints).
     from .concurrency import materialize_concurrently
 
     ivf_a, pq_a, beam_a, exact_l2, exact_cos = materialize_concurrently(

@@ -1,12 +1,12 @@
-"""Materialize a synthetic sf1.0-equivalent dataset and spot-bench the
-most expensive queries against it (dev utility, not shipped API).
+"""Materialize a synthetic sf1.0-equivalent dataset and probe registry
+gates for nonlinearity against it (dev utility, not shipped API).
 
 The driver provides sf0.001/0.01/0.1; the 100 TB question the sf0.1
 bench cannot answer is NONLINEARITY — a plan that is accidentally
 O(n^2), or spills, shows a >>10x wall-clock ratio at 10x the rows.
-This script builds ``/root/repo/.bench_sf1`` by replicating the sf0.1
-fact tables 10x with shifted keys (dimension tables are copied as-is,
-like TPC-H's fixed-size dims):
+``build`` writes ``.bench_sf1`` next to this script by replicating the
+fact tables of ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) 10x with shifted keys (dimension tables are copied
+as-is, like TPC-H's fixed-size dims):
 
 - ``lineitem``/``orders``: orderkey' = orderkey*10 + rep, all other
   columns preserved, so join fan-out and date selectivity scale
@@ -18,10 +18,20 @@ like TPC-H's fixed-size dims):
 - ``events``: event_id' shifted, user_id preserved (10x denser
   sessions per user — the realistic direction).
 
+Gates filtered on an id bound (e.g. ``doc_id < N``) shrink under the
+id-shifting replication: they measure less data at sf1.0, not more, so
+their ratio says nothing about scaling.
+
+``probe`` runs the named gates through ``bench.py`` (best of 3, noop
+sink) on the source tables and on their 10x replica, and prints each
+gate's wall ratio and job counts.  Both commands make their sessions
+with ``session.get_spark``: size them with ``$SPARK_GRAFT_CPUS`` and
+``$SPARK_DRIVER_MEMORY`` for the host.
+
 Usage::
 
-    python scripts_scale.py build   # write .bench_sf1 (once, ~1 min)
-    python scripts_scale.py bench   # run the top-5 at sf0.1 and sf1.0
+    python scripts_scale.py build                 # write .bench_sf1 (once)
+    python scripts_scale.py probe graph_pagerank,q5_local_supplier
 """
 
 import json
@@ -29,51 +39,25 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.bench_sf1"
-TOP5 = [
-    "pipeline_pretraining",
-    "q5_local_supplier",
-    "expr_casts",
-    "text_lm_score",
-    "dedup_components",
-    # round-3 additions that read a FULL scaled table (gates filtered
-    # on doc_id < N shrink under the id-shifting replication and are
-    # excluded — they'd measure less data at sf1.0, not more)
-    "text_collocations",
-    "decontaminate_bloom",
-    "profile_heavy_hitters",
-    "streaming_window",
-    "events_funnel",
-    # late round-3 additions: the iterative graph rounds and the
-    # decimal moment aggregate are where superlinear behavior would
-    # hide; sequence mining adds the user-window + vocab-count shape
-    "graph_pagerank",
-    "profile_corr",
-    "events_sequences",
-    # round-7: the re-composed whole-corpus anchor dedup (full
-    # documents scan; replicas are distinct docs, so clusters keep
-    # their size and multiply in count -> candidates scale ~10x)
-    "dedup_ngram_jaccard",
-]
+from pandasy_spark.session import DEFAULT_SF_DIR  # noqa: E402
+
+SRC = DEFAULT_SF_DIR
+DST = os.path.join(ROOT, ".bench_sf1")
 COPY = [
     "region", "nation", "customer", "supplier", "part", "embeddings",
 ]
 
 
 def build() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    from pandasy_spark.session import get_spark
+
+    spark = get_spark("pandasy-scale-build")
+    spark.sparkContext.setLogLevel("ERROR")
     reps = spark.range(10).select(F.col("id").alias("__rep"))
 
     def rep10(df):
@@ -113,1697 +97,44 @@ def build() -> None:
     print("built", DST)
 
 
-def bench() -> None:
-    env = dict(os.environ, SPARK_GRAFT_QUERIES=",".join(TOP5))
+def probe(gates: str) -> None:
     out = {}
-    for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
+    base = os.path.basename(SRC.rstrip("/"))
+    for label, sf_dir in ((base, SRC), ("x10", DST)):
         r = subprocess.run(
-            [sys.executable, "/root/repo/bench.py"],
-            env=dict(env, SPARK_GRAFT_SF_DIR=sf_dir),
+            [sys.executable, os.path.join(ROOT, "bench.py")],
+            env=dict(os.environ, SPARK_GRAFT_QUERIES=gates,
+                     SPARK_GRAFT_SF_DIR=sf_dir),
             capture_output=True,
             text=True,
             check=True,
         )
-        out[label] = json.loads(r.stdout.strip().splitlines()[-1])
-        print(label, out[label])
-    ratios = {
-        q: round(out["sf1.0"]["queries"][q] / out["sf0.1"]["queries"][q], 2)
-        for q in TOP5
-    }
-    print(json.dumps({"sf1_over_sf01_ratio": ratios}))
-
-
-def probe() -> None:
-    """Ungated 10x probes for the operators whose GATES filter on
-    doc_id < N (codecs) or run on fixtures (warehouse merges): the
-    id-shifted replication shrinks those gates, so this bench runs the
-    operator over the FULL documents/orders table at sf0.1 and the
-    synthetic sf1.0 — per-payload codec CPU and single-join merges
-    should both scale ~linearly."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def codec_probe(sf_dir, encoder_mod, encoder_fn):
-        import pandas as pd
-
-        from pandasy_spark.extended import multimodal as X_mm
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-        def _enc(batches):
-            import importlib
-
-            import numpy as np
-
-            enc = getattr(importlib.import_module(encoder_mod), encoder_fn)
-            for pdf in batches:
-                payloads = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    h, w = d % 3 + 2, d % 5 + 2
-                    rr, cc = np.indices((h, w))
-                    arr = np.where(
-                        ((rr + cc) % 2 == 0)[:, :, None],
-                        np.array((d % 256, (d * 7) % 256, (d * 13) % 256), np.uint8),
-                        np.array(((d * 3) % 256, (d * 5) % 256, (d * 11) % 256), np.uint8),
-                    ).astype(np.uint8)
-                    payloads.append(enc(arr))
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-                )
-
-        with_payload = docs.mapInPandas(_enc, schema="doc_id long, payload binary")
-        return X_mm.image_stats(with_payload)
-
-    def scd2_probe(sf_dir):
-        from pandasy_spark.operators.scd import scd2_apply
-
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        dim = o.select(
-            "o_orderkey", "o_totalprice",
-            F.col("o_orderdate").alias("eff_from"),
-            F.lit(None).cast("date").alias("eff_to"),
-            F.lit(True).alias("is_current"),
+        # the full line (the one with `layers`); a compact tail line
+        # may follow it when the full line is long
+        out[label] = next(
+            json.loads(line) for line in r.stdout.splitlines()
+            if line.startswith("{") and '"layers"' in line
         )
-        snap = o.select(
-            "o_orderkey",
-            F.when(
-                F.col("o_orderkey") % 2 == 0, F.col("o_totalprice") + 1
-            ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
-        )
-        import datetime
-
-        return scd2_apply(
-            dim, snap, ["o_orderkey"], ["o_totalprice"],
-            datetime.date(2026, 1, 1),
-        )
-
-    def merge_probe(sf_dir):
-        from pandasy_spark.operators.scd import merge_upsert
-
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-            "o_orderkey", "o_totalprice", "o_orderstatus"
-        )
-        delta = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        )
-        return merge_upsert(o, delta, ["o_orderkey"])
-
-    probes = {
-        "codec_webp": lambda d: codec_probe(
-            d, "pandasy_spark.extended.webp", "encode_webp_lossless"
-        ),
-        "codec_gif": lambda d: codec_probe(
-            d, "pandasy_spark.extended.gif", "encode_gif"
-        ),
-        "scd2_full_orders": scd2_probe,
-        "merge_full_orders": merge_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name])
-    print(json.dumps({"ungated_probes": results}))
-
-
-def probe_r5() -> None:
-    """sf1.0 probes for the round-4 operators (VERDICT r4 item #6):
-    kmeans (corpus 10x, k fixed — expect ~10x linear assignment),
-    label propagation, last-touch attribution, RFM under the new
-    threshold-banding default, and the hashing featurizer — each over
-    the FULL scaled tables, not the gates' doc_id-bounded slices.
-    The embeddings table is copied (not replicated) by build(), so the
-    kmeans probe replicates it inline with shifted vec_ids."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r5")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def emb(sf_dir):
-        e = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        if sf_dir == DST:
-            reps = spark.range(10).select(F.col("id").alias("__rep"))
-            e = e.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * 10 + F.col("__rep")).alias("vec_id"),
-                "embedding",
-            )
-        return e
-
-    def kmeans_probe(sf_dir):
-        from pandasy_spark.extended.similarity import kmeans_exact
-
-        return kmeans_exact(emb(sf_dir), k=8, iters=2)
-
-    def labelprop_probe(sf_dir):
-        from pandasy_spark.extended.graph import (
-            cooccurrence_edges,
-            label_propagation,
-        )
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        e = cooccurrence_edges(li, "l_orderkey", "l_partkey", min_support=2)
-        return label_propagation(e, rounds=2)
-
-    def attribution_probe(sf_dir):
-        from pandasy_spark.extended.events import last_touch_attribution
-
-        return last_touch_attribution(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        )
-
-    def rfm_probe(sf_dir):
-        from pandasy_spark.extended.events import rfm_segments
-
-        return rfm_segments(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-    def hashfeat_probe(sf_dir):
-        from pandasy_spark.extended.text import hash_features
-
-        return hash_features(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    probes = {
-        "kmeans_10x_corpus": kmeans_probe,
-        "label_prop_full_lineitem": labelprop_probe,
-        "attribution_full_events": attribution_probe,
-        "rfm_threshold_full_events": rfm_probe,
-        "hash_features_full_docs": hashfeat_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r5_probes": results}))
-
-
-def bpe50k() -> None:
-    """50k-merge adaptive-BPE convergence demonstration (VERDICT r4
-    item #7): run the DISTRIBUTED batched loop (local_types_threshold=0)
-    at num_merges=50000 and ASSERT the pass count is O(hundreds) — the
-    geometric x2-growth/halve-on-conflict batch schedule, not a
-    per-merge job chain.
-
-    The synthetic sf0.1 documents corpus has only ~30 distinct word
-    types (merge ceiling ~89 — recorded as `real_corpus` below), far
-    too small to exercise a 50k-merge vocabulary.  The demo therefore
-    derives a Zipf(1) pseudo-vocabulary from the REAL doc_ids: 50
-    deterministic samples per document, rank = floor(exp(u*ln 2e5))
-    with u = xxhash64-uniform (inverse-CDF Zipf), word = digits->
-    letters of the rank — ~10^5 observed types with natural-language
-    frequency skew, which is what the adaptive schedule's
-    mostly-disjoint-merges claim is about."""
-    import math
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.extended.text import bpe_learn
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-bpe50k")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    real = spark.read.parquet(f"{SRC}/documents.parquet")
-    real_stats: dict = {}
-    t0 = time.perf_counter()
-    real_merges = bpe_learn(
-        real, num_merges=50_000, local_types_threshold=0, stats=real_stats
-    )
-    real_wall = round(time.perf_counter() - t0, 1)
-
-    t = (
-        real.select("doc_id")
-        .select(
-            F.explode(F.sequence(F.lit(0), F.lit(49))).alias("i"), "doc_id"
-        )
-        .select((F.col("doc_id") * 50 + F.col("i")).alias("t"))
-    )
-    u = (F.pmod(F.xxhash64("t"), F.lit(1_000_000)) + 1) / 1_000_000.0
-    rank = F.floor(F.exp(u * math.log(200_000.0))).cast("long")
-    # word = 6 hex chars of md5(rank) folded to letters: RANDOM letter
-    # sequences (dense base-N rank encodings share prefixes — aaab/
-    # aaac/... — so every candidate merge overlaps every other and the
-    # disjoint batch can never fill; random stems are what natural
-    # vocabularies look like after the letter-pair phase)
-    word = F.translate(
-        F.substring(F.md5(F.col("rank").cast("string")), 1, 6),
-        "0123456789abcdef",
-        "abcdefghijklmnop",
-    )
-    corpus = t.select(rank.alias("rank")).select(word.alias("text"))
-    stats: dict = {}
-    t0 = time.perf_counter()
-    merges = bpe_learn(
-        corpus, num_merges=50_000, local_types_threshold=0, stats=stats
-    )
-    wall = round(time.perf_counter() - t0, 1)
-    assert stats["merges"] >= 50_000, f"vocabulary ran dry: {stats}"
-    assert stats["passes"] <= 1000, f"adaptive batching did not converge: {stats}"
-    assert stats["merges"] == len(merges)
-    print(
-        json.dumps(
-            {
-                "bpe50k": {"wall_sec": wall, **stats},
-                "real_corpus": {"wall_sec": real_wall, **real_stats},
-            }
-        )
-    )
-
-
-
-
-def probe_r6() -> None:
-    """sf1.0 probes for the round-5/6 operators over the FULL scaled
-    tables (the gates bound rows for the oracle; the probe measures
-    the operator at 10x): BFS frontier expansion, k-core peeling,
-    Markov transitions, CMS + HLL + KMV sketch builds, BM25 retrieval,
-    RAKE extraction, paragraph dedup, script profiling, and the PQ
-    index build over an inline-replicated embeddings table."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r6")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def emb(sf_dir):
-        e = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        if sf_dir == DST:
-            reps = spark.range(10).select(F.col("id").alias("__rep"))
-            e = e.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * 10 + F.col("__rep")).alias("vec_id"),
-                "embedding",
-            )
-        return e
-
-    def cooc(sf_dir):
-        from pandasy_spark.extended.graph import cooccurrence_edges
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return cooccurrence_edges(li, "l_orderkey", "l_partkey", min_support=2)
-
-    def bfs_probe(sf_dir):
-        from pandasy_spark.extended.graph import bfs_hops
-
-        e = cooc(sf_dir)
-        nodes = (
-            e.select(F.col("x").alias("node"))
-            .union(e.select(F.col("y").alias("node")))
-            .distinct()
-        )
-        return bfs_hops(e, nodes.filter(F.col("node") % 97 == 0), max_hops=3)
-
-    def kcore_probe(sf_dir):
-        from pandasy_spark.extended.graph import kcore
-
-        return kcore(cooc(sf_dir), k=3, rounds=3)
-
-    def markov_probe(sf_dir):
-        from pandasy_spark.extended.events import transition_matrix
-
-        return transition_matrix(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-    def cms_probe(sf_dir):
-        from pandasy_spark.extended.sketches import cms_sketch
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return cms_sketch(
-            li.select(F.col("l_returnflag").alias("g"), F.col("l_partkey").alias("k")),
-            ["g"],
-            "k",
-        )
-
-    def hll_probe(sf_dir):
-        from pandasy_spark.extended.sketches import hll_estimate
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return hll_estimate(li, ["l_returnflag"], "l_partkey")
-
-    def kmv_probe(sf_dir):
-        from pandasy_spark.extended.sketches import kmv_estimate
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return kmv_estimate(li, ["l_returnflag"], "l_partkey", k=64)
-
-    def bm25_probe(sf_dir):
-        from pandasy_spark.extended.text import bm25_search
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return bm25_search(docs, ["data", "spark", "query"])
-
-    def rake_probe(sf_dir):
-        from pandasy_spark.extended.text import rake_keywords
-
-        return rake_keywords(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    def paragraph_probe(sf_dir):
-        from pandasy_spark.extended.dedup import paragraph_dedup
-
-        return paragraph_dedup(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    def script_probe(sf_dir):
-        from pandasy_spark.extended.text import script_profile
-
-        return script_profile(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    def pq_probe(sf_dir):
-        from pandasy_spark.extended.similarity import pq_encode
-
-        _, codes = pq_encode(emb(sf_dir), m=4, n_codes=8, iters=2)
-        return codes
-
-    def quantile_probe(sf_dir):
-        from pandasy_spark.extended.profile import quantile_disc_twopass
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-            "l_returnflag",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        return quantile_disc_twopass(li, ["l_returnflag"], "cents", 500)
-
-    def chisq_probe(sf_dir):
-        from pandasy_spark.extended.profile import chi_square
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return chi_square(
-            ev.withColumn("ub", F.col("user_id") % 4), "event_type", "ub"
-        )
-
-    def join_size_probe(sf_dir):
-        from pandasy_spark.extended.sketches import (
-            cms_inner_product,
-            cms_sketch,
-        )
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-            F.col("l_returnflag").alias("g"), F.col("l_partkey").alias("k")
-        )
-        sk = cms_sketch(li, ["g"], "k")
-        return cms_inner_product(sk, sk, ["g"])
-
-    def normalize_probe(sf_dir):
-        from pandasy_spark.extended.text import normalize_text
-
-        return normalize_text(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        )
-
-    def attribution_linear_probe(sf_dir):
-        from pandasy_spark.extended.events import linear_attribution
-
-        return linear_attribution(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-    probes = {
-        "bfs_full_lineitem": bfs_probe,
-        "quantile_twopass_full_lineitem": quantile_probe,
-        "chisq_full_events": chisq_probe,
-        "cms_join_size_full_lineitem": join_size_probe,
-        "normalize_full_docs": normalize_probe,
-        "attribution_linear_full_events": attribution_linear_probe,
-        "kcore_full_lineitem": kcore_probe,
-        "markov_full_events": markov_probe,
-        "cms_full_lineitem": cms_probe,
-        "hll_full_lineitem": hll_probe,
-        "kmv_full_lineitem": kmv_probe,
-        "bm25_full_docs": bm25_probe,
-        "rake_full_docs": rake_probe,
-        "paragraph_dedup_full_docs": paragraph_probe,
-        "script_profile_full_docs": script_probe,
-        "pq_encode_10x_embeddings": pq_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r6_probes": results}))
-
-
-
-def probe_r6b() -> None:
-    """sf1.0 probes for the round-6 continuation operators over FULL
-    scaled tables: CDC apply, resample/LOCF, weighted-minhash dedup,
-    weighted SSSP, radius join (tiled 10x embeddings so density — and
-    with it the intrinsic pair count — stays fixed), beam ANN over a
-    10x corpus, wedge-join node similarity, interval join, EWMA fold,
-    sessionized attribution, Benford screen, readability."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r6b")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def emb(sf_dir):
-        e = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        if sf_dir == DST:
-            reps = spark.range(10).select(F.col("id").alias("__rep"))
-            e = e.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * 10 + F.col("__rep")).alias("vec_id"),
-                "embedding",
-                F.col("__rep"),
-            )
-        else:
-            e = e.withColumn("__rep", F.lit(0))
-        return e
-
-    def ev(sf_dir):
-        return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    def cdc_probe(sf_dir):
-        from pandasy_spark.operators.scd import cdc_apply
-
-        e = ev(sf_dir)
-        cutoff = F.lit("2024-01-15").cast("timestamp")
-        base = e.filter(F.col("ts") < cutoff).groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long").alias("cents"),
-        )
-        chg = e.filter(F.col("ts") >= cutoff).select(
-            "user_id", F.col("event_id").alias("seq"),
-            F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-            (F.col("user_id") % 100).cast("long").alias("n"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        return cdc_apply(base, chg, ["user_id"], ["n", "cents"])
-
-    def resample_probe(sf_dir):
-        from pandasy_spark.extended.events import resample_locf
-
-        return resample_locf(ev(sf_dir), key_col="event_type")
-
-    def wjaccard_probe(sf_dir):
-        from pandasy_spark.extended.dedup import weighted_jaccard_pairs
-
-        return weighted_jaccard_pairs(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            threshold_milli=300,
-        )
-
-    def sssp_probe(sf_dir):
-        from pandasy_spark.extended.graph import cooccurrence_edges, sssp
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        e = cooccurrence_edges(li, "l_orderkey", "l_partkey", min_support=2)
-        ew = e.select("x", "y", (F.lit(1) + (F.col("x") + F.col("y")) % 7).alias("w"))
-        nodes = e.select(F.col("x").alias("node")).union(
-            e.select(F.col("y").alias("node"))
-        ).distinct()
-        return sssp(ew, nodes.filter(F.col("node") % 97 == 0), rounds=3)
-
-    def radius_probe(sf_dir):
-        from pandasy_spark.extended.spatial import radius_pairs
-
-        # tile replicas so point DENSITY (and the intrinsic pair
-        # count per point) stays fixed while rows go 10x
-        pts = emb(sf_dir).select(
-            F.col("vec_id").alias("id"),
-            (
-                F.floor(F.element_at(F.col("embedding").cast("array<double>"), 1) * 1000)
-                + (F.col("__rep") % 4) * 1200
-            ).cast("long").alias("x"),
-            (
-                F.floor(F.element_at(F.col("embedding").cast("array<double>"), 2) * 1000)
-                + (F.col("__rep") / 4).cast("long") * 1500
-            ).cast("long").alias("y"),
-        )
-        return radius_pairs(pts, radius=60)
-
-    def beam_probe(sf_dir):
-        from pandasy_spark.extended.similarity import beam_topk
-
-        e = emb(sf_dir)
-        corpus = e.filter(F.col("vec_id") >= 10).select("vec_id", "embedding")
-        qs = e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return beam_topk(corpus, qs, k=5, m=8, beam_width=32, rounds=3)
-
-    def njaccard_probe(sf_dir):
-        from pandasy_spark.extended.graph import (
-            cooccurrence_edges,
-            neighbor_jaccard,
-        )
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        e = cooccurrence_edges(li, "l_orderkey", "l_partkey", min_support=2)
-        return neighbor_jaccard(e, min_common=2)
-
-    def interval_probe(sf_dir):
-        from pandasy_spark.operators.rangejoin import interval_join
-
-        e = ev(sf_dir)
-        end_us = lambda mins: F.timestamp_micros(  # noqa: E731
-            F.unix_micros(F.col("ts")) + mins * 60_000_000
-        )
-        left = e.filter(F.col("event_type") == "click").select(
-            "user_id", F.col("event_id").alias("lid"),
-            F.col("ts").alias("ls"), end_us((F.col("user_id") % 7) + 1).alias("le"),
-        )
-        right = e.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("event_id").alias("rid"),
-            F.col("ts").alias("rs"), end_us(F.lit(5)).alias("re"),
-        )
-        return interval_join(
-            left, right, ["user_id"], "ls", "le", "rs", "re", bucket_seconds=300
-        )
-
-    def ewma_probe(sf_dir):
-        from pandasy_spark.extended.events import ewma_per_key
-
-        return ewma_per_key(ev(sf_dir))
-
-    def session_attr_probe(sf_dir):
-        from pandasy_spark.extended.events import sessionized_attribution
-
-        return sessionized_attribution(ev(sf_dir))
-
-    def benford_probe(sf_dir):
-        from pandasy_spark.extended.profile import benford_screen
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return benford_screen(li, "l_extendedprice", ["l_returnflag"])
-
-    def readability_probe(sf_dir):
-        from pandasy_spark.extended.text import readability
-
-        return readability(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    probes = {
-        "cdc_full_events": cdc_probe,
-        "resample_full_events": resample_probe,
-        "wjaccard_full_docs": wjaccard_probe,
-        "sssp_full_lineitem": sssp_probe,
-        "radius_tiled_10x_embeddings": radius_probe,
-        "beam_10x_embeddings": beam_probe,
-        "neighbor_jaccard_full_lineitem": njaccard_probe,
-        "interval_join_full_events": interval_probe,
-        "ewma_full_events": ewma_probe,
-        "session_attr_full_events": session_attr_probe,
-        "benford_full_lineitem": benford_probe,
-        "readability_full_docs": readability_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    import time as _t
-
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r6b_probes": results}))
-
-
-def probe_r6c() -> None:
-    """sf1.0 probes for the batch-F operators over FULL scaled
-    tables: exact KS and Mann-Whitney (distinct-value-domain window
-    scans — the probe proves the domain, not the rows, pays the
-    ordered pass), SCC over the full high-quantity flow graph, and
-    the staged-source paths (CSV and partitioned parquet) end to end
-    at 10x the bytes."""
-    import shutil
-    import tempfile
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r6c")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def li(sf_dir):
-        return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
-    def ks_probe(sf_dir):
-        from pandasy_spark.extended.profile import ks_statistic
-
-        return ks_statistic(li(sf_dir), "l_extendedprice", "l_returnflag", "A", "R")
-
-    def mw_probe(sf_dir):
-        from pandasy_spark.extended.profile import mann_whitney
-
-        return mann_whitney(li(sf_dir), "l_extendedprice", "l_returnflag", "A", "R")
-
-    def scc_probe(sf_dir):
-        from pandasy_spark.extended.graph import scc
-
-        edges = li(sf_dir).filter(F.col("l_quantity") >= 48).select(
-            F.col("l_suppkey").alias("u"),
-            (F.col("l_partkey") % 100 + 1).alias("v"),
-        )
-        return scc(edges, "u", "v", rounds=8, outer_rounds=4)
-
-    def csv_probe(sf_dir):
-        # staged write + explicit-schema read + aggregate, 10x bytes
-        from pandasy_spark.sources import read_csv, write_csv
-
-        stage = tempfile.mkdtemp(prefix="probe_csv_")
-        subset = li(sf_dir).select(
-            "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag",
-        )
-        write_csv(subset, stage)
-        back = read_csv(
-            spark, stage,
-            schema="l_orderkey:long,l_quantity:double,"
-                   "l_extendedprice:double,l_returnflag:str",
-        )
-        out = back.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))).alias("c"),
-        )
-        out._probe_cleanup = stage  # noqa: SLF001
-        return out
-
-    probes = {
-        "ks_full_lineitem": ks_probe,
-        "mannwhitney_full_lineitem": mw_probe,
-        "scc_full_lineitem": scc_probe,
-        "csv_roundtrip_full_lineitem": csv_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                df = fn(sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-                stage = getattr(df, "_probe_cleanup", None)
-                if stage:
-                    shutil.rmtree(stage, ignore_errors=True)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r6c_probes": results}))
-
-
-def probe_r6d() -> None:
-    """sf1.0 probes for the batch H/I/J operators over full scaled
-    tables: the prefix-scan family (concurrency sweep line, skyline,
-    gini ranks), the two-pass quantile family (cont + weighted), the
-    streak islands, bootstrap explode, phrase-search posting joins,
-    and the geofence narrow map."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r6d")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def t(sf_dir, name):
-        # the catalog loader, not a raw read: .bench_sf1 parquet stores
-        # naive micros that would otherwise surface as TIMESTAMP_NTZ
-        from pandasy_spark.sources import load_table
-
-        return load_table(spark, sf_dir, name)
-
-    def streaks_probe(sf_dir):
-        from pandasy_spark.extended.events import activity_streaks
-
-        return activity_streaks(t(sf_dir, "events"), "user_id", "ts")
-
-    def concurrency_probe(sf_dir):
-        from pandasy_spark.extended.events import interval_concurrency
-
-        ev = t(sf_dir, "events").filter(
-            F.col("ts").isNotNull() & F.col("value").isNotNull()
-        )
-        iv = ev.select(
-            F.unix_micros(F.col("ts")).alias("s"),
-            (
-                F.unix_micros(F.col("ts"))
-                + F.greatest(
-                    F.lit(1), F.floor(F.col("value") * 60).cast("long")
-                )
-                * F.lit(1_000_000)
-            ).alias("e"),
-        )
-        return interval_concurrency(iv, "s", "e")
-
-    def qcont_probe(sf_dir):
-        from pandasy_spark.extended.profile import quantile_cont_twopass
-
-        cents = t(sf_dir, "lineitem").select(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents")
-        )
-        return quantile_cont_twopass(cents, "cents", p_milli=900)
-
-    def wmedian_probe(sf_dir):
-        from pandasy_spark.extended.profile import weighted_quantile_twopass
-
-        li = t(sf_dir, "lineitem").select(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-            F.col("l_quantity").cast("long").alias("qty"),
-        )
-        return weighted_quantile_twopass(li, "cents", "qty", q_milli=500)
-
-    def gini_probe(sf_dir):
-        from pandasy_spark.extended.profile import gini_concentration
-
-        od = t(sf_dir, "orders").select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        return gini_concentration(od, ["o_custkey"], "cents")
-
-    def bootstrap_probe(sf_dir):
-        from pandasy_spark.extended.sampling import bootstrap_resample
-
-        od = t(sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderpriority",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        return bootstrap_resample(od, "o_orderkey", salt=7).groupBy(
-            "o_orderpriority"
-        ).agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("c"))
-
-    def phrase_probe(sf_dir):
-        from pandasy_spark.extended.text import phrase_search
-
-        return phrase_search(t(sf_dir, "documents"), ["fast", "spark"])
-
-    def geofence_probe(sf_dir):
-        from pandasy_spark.extended.spatial import point_in_polygon
-
-        li = t(sf_dir, "lineitem").select(
-            (F.col("l_partkey") * 17 % 100).cast("long").alias("x"),
-            (F.col("l_suppkey") * 31 % 100).cast("long").alias("y"),
-        )
-        poly = [(10, 10), (90, 20), (80, 90), (50, 45), (20, 80)]
-        return point_in_polygon(li, poly, "x", "y").groupBy("inside").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-
-    def coalesce_probe(sf_dir):
-        from pandasy_spark.extended.events import coalesce_intervals
-
-        ev = t(sf_dir, "events").filter(
-            F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & F.col("user_id").isNotNull()
-        )
-        iv = ev.select(
-            "user_id",
-            F.unix_micros(F.col("ts")).alias("s"),
-            (F.unix_micros(F.col("ts")) + F.lit(60_000_000)).alias("e"),
-        )
-        return coalesce_intervals(iv, ["user_id"], "s", "e").groupBy(
-            "user_id"
-        ).agg(F.count(F.lit(1)).alias("n"))
-
-    probes = {
-        "streaks_events": streaks_probe,
-        "concurrency_events": concurrency_probe,
-        "quantile_cont_lineitem": qcont_probe,
-        "weighted_median_lineitem": wmedian_probe,
-        "gini_orders": gini_probe,
-        "bootstrap_orders": bootstrap_probe,
-        "phrase_documents": phrase_probe,
-        "geofence_lineitem": geofence_probe,
-        "coalesce_events": coalesce_probe,
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r6d_probes": results}))
-
-
-
-
-def probe_r6e() -> None:
-    """sf1.0 probes for the session-2 operators over FULL scaled
-    tables (gates bound rows for the oracle; probes measure 10x):
-    Hilbert key + clustered write path, HITS rounds, PSI drift, the
-    KMV-thresholded class balance, the fixed winnowing pass, and the
-    per-payload codec CPU of QOI / G.711 / EXIF over all documents.
-    blocked_jaccard_pairs is deliberately NOT probed at 10x: blocks
-    scale with the corpus so its pair loop is Σ|block|² BY SEMANTICS
-    (~100x at 10x rows) — the documented scale path for near-dup at
-    100 TB is the MinHash/LSH family, which IS probed (r2/r6)."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r6e")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def t(sf_dir, name):
-        from pandasy_spark.sources import load_table
-
-        return load_table(spark, sf_dir, name)
-
-    def hilbert_probe(sf_dir):
-        from pandasy_spark.sources import with_hilbert
-
-        return with_hilbert(
-            t(sf_dir, "orders"), ["o_custkey", "o_totalprice"], bits=16
-        ).select("o_orderkey", "__h")
-
-    def hits_probe(sf_dir):
-        from pandasy_spark.extended.graph import hits
-
-        li = t(sf_dir, "lineitem")
-        e1 = li.select(
-            F.col("l_partkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        e2 = li.select(
-            (F.col("l_suppkey") + 1_000_000).alias("src"),
-            (F.col("l_orderkey") + 2_000_000).alias("dst"),
-        )
-        return hits(e1.unionByName(e2), iterations=2)
-
-    def psi_probe(sf_dir):
-        from pandasy_spark.extended.profile import psi_drift
-
-        return psi_drift(
-            t(sf_dir, "events"),
-            "value",
-            F.col("ts") < F.lit("2024-01-20").cast("timestamp"),
-            bins=10,
-        )
-
-    def balance_probe(sf_dir):
-        from pandasy_spark.extended.sampling import class_balance
-
-        ev = t(sf_dir, "events").select("event_id", "event_type")
-        return class_balance(ev, "event_type", "event_id")
-
-    def winnow_probe(sf_dir):
-        from pandasy_spark.extended.dedup import winnow_fingerprints
-
-        # modulo slice (NOT an id-range filter — replication shifts
-        # ids, so a fixed range selects equal rows at both scales):
-        # ~500 docs at sf0.1, 5000 at sf1.0.  Winnowing costs ~15 ms
-        # per 300-char doc in interpreted HOFs, so the full 50k-doc
-        # probe would dominate the whole probe batch.
-        docs = t(sf_dir, "documents").filter(F.pmod(F.col("doc_id"), 10) == 0)
-        return winnow_fingerprints(docs, k=5, w=4)
-
-    def qoi_probe(sf_dir):
-        import numpy as np
-        import pandas as pd
-
-        docs = t(sf_dir, "documents").select("doc_id")
-
-        def _enc(batches):
-            from pandasy_spark.extended.qoi import encode_qoi
-
-            for pdf in batches:
-                payloads = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w, h, delta = d % 6 + 2, d % 4 + 1, d % 4
-                    base = ((d * 97) % 200, (d * 101) % 200, (d * 103) % 200)
-                    col = np.arange(w, dtype=np.int64) * delta
-                    row = np.stack([b + col for b in base], axis=-1)
-                    arr = np.broadcast_to(row, (h, w, 3)).astype(np.uint8)
-                    payloads.append(encode_qoi(arr))
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-                )
-
-        from pandasy_spark.extended.multimodal import image_stats
-
-        return image_stats(
-            docs.mapInPandas(_enc, schema="doc_id long, payload binary")
-        )
-
-    def g711_probe(sf_dir):
-        import pandas as pd
-
-        docs = t(sf_dir, "documents").select("doc_id")
-
-        def _enc(batches):
-            from pandasy_spark.extended.audio import encode_wav_g711
-
-            for pdf in batches:
-                payloads = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    n = 10 + d % 50
-                    codes = bytearray(
-                        (d * 13 + i * 7) % 256 for i in range(n)
-                    )
-                    payloads.append(encode_wav_g711(bytes(codes), 8000, "mu"))
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-                )
-
-        from pandasy_spark.extended.audio import wav_features
-
-        return wav_features(
-            docs.mapInPandas(_enc, schema="doc_id long, payload binary")
-        )
-
-    def exif_probe(sf_dir):
-        import numpy as np
-        import pandas as pd
-
-        docs = t(sf_dir, "documents").select("doc_id")
-
-        def _enc(batches):
-            from pandasy_spark.extended.jpeg import encode_jpeg
-            from pandasy_spark.extended.multimodal import build_exif_app1
-
-            for pdf in batches:
-                payloads = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    arr = np.full((2, 2, 3), (d * 37) % 256, dtype=np.uint8)
-                    jpg = encode_jpeg(arr)
-                    app1 = build_exif_app1(
-                        make=f"Maker{d % 5}", model=f"M-{d % 11}",
-                        orientation=d % 8 + 1,
-                        datetime=f"2024:{d % 12 + 1:02d}:15 12:00:00",
-                        datetime_original=(
-                            f"2024:{d % 12 + 1:02d}:{d % 28 + 1:02d} 08:30:00"
-                        ),
-                        pixel_w=d % 100 + 1, pixel_h=d % 50 + 1,
-                    )
-                    payloads.append(jpg[:2] + app1 + jpg[2:])
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-                )
-
-        from pandasy_spark.extended.multimodal import exif_features
-
-        return exif_features(
-            docs.mapInPandas(_enc, schema="doc_id long, payload binary")
-        )
-
-    probes = {
-        "hilbert_orders": hilbert_probe,
-        "hits_lineitem": hits_probe,
-        "psi_events": psi_probe,
-        "class_balance_events": balance_probe,
-        "winnow_documents": winnow_probe,
-        "qoi_documents": qoi_probe,
-        "g711_documents": g711_probe,
-        "exif_documents": exif_probe,
-    }
-    subset = sys.argv[2].split(",") if len(sys.argv) > 2 else None
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes.items():
-        if subset and name not in subset:
+        print(label, json.dumps(out[label]["queries"]),
+              json.dumps(out[label].get("errors", {})), flush=True)
+    ratios = {}
+    for q in gates.split(","):
+        a, b = out[base]["layers"].get(q), out["x10"]["layers"].get(q)
+        if a is None or b is None:
+            ratios[q] = None  # errored at one scale: see the lines above
             continue
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r6e_probes": results}))
-
-
-def probe_r8() -> None:
-    """sf1.0 probes for the round-8 prefix-scan quantile rewrite
-    (VERDICT r7 items #3/#8), on a DELIBERATELY pathological value
-    distribution: ~99.9% of rows dense in [0, 1e6) plus a handful of
-    4e12 outliers stretching the domain, so the coarse step is ~1e9
-    and the target cell holds up to a MILLION distinct values — the
-    refine sliver that the pre-rewrite global Window.orderBy funneled
-    through ONE task.  The probe proves the no-group two-pass
-    quantiles now scale flat-to-linear on exactly that shape."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r8")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def skewed(sf_dir):
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return li.select(
-            F.when(
-                F.col("l_orderkey") % 1000 == 0,
-                F.lit(4_000_000_000_000),
-            )
-            .otherwise(
-                (F.col("l_orderkey") * 7 + F.col("l_linenumber"))
-                % 1_000_000
-            )
-            .cast("long")
-            .alias("v"),
-            (F.col("l_quantity").cast("long") % 7 + 1).alias("w"),
-        )
-
-    def cont_probe(sf_dir):
-        from pandasy_spark.extended.profile import quantile_cont_twopass
-
-        return quantile_cont_twopass(skewed(sf_dir), "v", p_milli=500)
-
-    def weighted_probe(sf_dir):
-        from pandasy_spark.extended.profile import (
-            weighted_quantile_twopass,
-        )
-
-        return weighted_quantile_twopass(
-            skewed(sf_dir), "v", "w", q_milli=500
-        )
-
-    def disc_probe(sf_dir):
-        from pandasy_spark.extended.profile import quantile_disc_twopass
-
-        return quantile_disc_twopass(skewed(sf_dir), [], "v", q_milli=500)
-
-    def token_budget_probe(sf_dir):
-        from pandasy_spark.extended.sampling import token_budget_sample
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return token_budget_sample(docs, 800, domain_col="source")
-
-    def dsir_probe(sf_dir):
-        from pandasy_spark.extended.sampling import dsir_weights
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return dsir_weights(docs, F.col("lang") == "en")
-
-    results = {}
-    for name, fn in [
-        ("quantile_cont_skewed", cont_probe),
-        ("weighted_quantile_skewed", weighted_probe),
-        ("quantile_disc_skewed", disc_probe),
-        ("sample_token_budget", token_budget_probe),
-        ("sample_dsir", dsir_probe),
-    ]:
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r8_probes": results}))
-
-
-def probe_r9() -> None:
-    """sf1.0 (10x) probes for the round-9 operators: the shared
-    multi-quantile pass, the PR-AUC / NDCG / gains ranking evals, the
-    mutual-information screen, the regression metrics, and graph
-    modularity.  Events replicate 10x onto the SAME 150 users, so the
-    ndcg/gains probes deepen every per-user partition 10x — the skew
-    direction that breaks per-query windows; lineitem replicates onto
-    10x orderkeys, so the modularity co-occurrence join sees 10x
-    baskets over the same 1000 suppliers (edge support grows, pair
-    space saturates — the dense direction)."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r9")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def quantile_multi_probe(sf_dir):
-        from pandasy_spark.extended.profile import quantile_disc_multi
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        cents = li.select(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents")
-        )
-        return quantile_disc_multi(cents, "cents", [100, 500, 900, 990])
-
-    def pr_auc_probe(sf_dir):
-        from pandasy_spark.extended.ml import pr_auc_exact
-        from pandasy_spark.extended.text import with_text_stats
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        scored = with_text_stats(docs).select(
-            "quality", (F.col("lang") == "en").alias("pos")
-        )
-        return pr_auc_exact(scored, "quality", F.col("pos"), decimals=4)
-
-    def mutual_info_probe(sf_dir):
-        from pandasy_spark.extended.profile import mutual_information
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return mutual_information(docs, "lang", "source")
-
-    def ndcg_probe(sf_dir):
-        from pandasy_spark.extended.ml import ndcg_exact
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        base = ev.filter(F.col("event_id").isNotNull()).select(
-            "user_id",
-            "event_id",
-            F.when(F.col("event_type") == "purchase", 3)
-            .when(F.col("event_type") == "signup", 2)
-            .when(F.col("event_type") == "click", 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("rel"),
-            "value",
-        )
-        return ndcg_exact(base, "user_id", "event_id", "rel", "value")
-
-    def gains_probe(sf_dir):
-        from pandasy_spark.extended.ml import cumulative_gains
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return cumulative_gains(
-            ev, "value", F.col("event_type") == "purchase", decimals=4
-        )
-
-    def regression_probe(sf_dir):
-        from pandasy_spark.extended.ml import ols_simple, regression_metrics
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        v = li.select(
-            F.col("l_quantity").cast("long").alias("x"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y"),
-        )
-        fit = ols_simple(v, "x", "y").select(
-            "slope_milli", "intercept_milli"
-        )
-        pred = v.crossJoin(F.broadcast(fit)).select(
-            "y",
-            F.expr(
-                "CAST(FLOOR((slope_milli * x + intercept_milli) / 1000.0)"
-                " AS BIGINT)"
-            ).alias("p"),
-        )
-        return regression_metrics(pred, "y", "p")
-
-    def modularity_probe(sf_dir):
-        from pandasy_spark.extended.graph import (
-            cooccurrence_edges,
-            modularity,
-        )
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        edges = cooccurrence_edges(
-            li, "l_orderkey", "l_suppkey", min_support=2
-        ).select("x", "y")
-        community = sup.select(
-            F.col("s_suppkey").alias("node"),
-            F.col("s_nationkey").cast("long").alias("comm"),
-        )
-        return modularity(edges, community, "x", "y", "node", "comm")
-
-    results = {}
-    for name, fn in [
-        ("agg_quantile_multi", quantile_multi_probe),
-        ("ml_pr_auc", pr_auc_probe),
-        ("profile_mutual_info", mutual_info_probe),
-        ("ml_ndcg", ndcg_probe),
-        ("ml_gains", gains_probe),
-        ("ml_regression", regression_probe),
-        ("graph_modularity", modularity_probe),
-    ]:
-        results[name] = {}
-        for label, sf_dir in [("sf0.1", SRC), ("sf1.0", DST)]:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r9_probes": results}))
-
-
-def probe_r9b() -> None:
-    """10x probes for the round-9 session-3 operators.
-
-    - dbscan: 10x points TILED over 10x area (density constant: the
-      eps-graph is output-sized, so constant density is the honest
-      scaling — an un-tiled 10x replication would measure the pair
-      OUTPUT growing ~100x, an input property, not a plan property).
-      Note the 10x tier crosses the components small-graph threshold
-      (~1.1M core-core edges > 1M), so it exercises the DISTRIBUTED
-      star-contraction path the 1x tier short-circuits.
-    - random_projection: narrow map over 10x vectors (distinct ids).
-    - confusion / variant: 10x documents / events from the built
-      sf1.0 tables.
-    """
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r9b")
-    spark.sparkContext.setLogLevel("ERROR")
-    reps = spark.range(10).select(F.col("id").alias("__rep"))
-
-    def _points(scale10: bool):
-        emb = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        pts = emb.select(
-            F.col("vec_id").alias("id"),
-            F.floor(
-                F.element_at(F.col("embedding").cast("array<double>"), 1)
-                * 1000
-            ).cast("long").alias("x"),
-            F.floor(
-                F.element_at(F.col("embedding").cast("array<double>"), 2)
-                * 1000
-            ).cast("long").alias("y"),
-        )
-        if not scale10:
-            return pts
-        return (
-            pts.crossJoin(F.broadcast(reps))
-            .select(
-                (F.col("id") * 10 + F.col("__rep")).alias("id"),
-                (F.col("x") + F.col("__rep") * 2200).alias("x"),
-                "y",
-            )
-        )
-
-    def dbscan_probe(scale10: bool):
-        from pandasy_spark.extended.spatial import dbscan
-
-        return dbscan(_points(scale10), eps=60, min_pts=5)
-
-    def rp_probe(scale10: bool):
-        from pandasy_spark.extended.similarity import random_projection
-
-        emb = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        if scale10:
-            emb = emb.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * 10 + F.col("__rep")).alias("vec_id"),
-                "embedding",
-            )
-        return random_projection(emb, vec_col="embedding", out_dim=8)
-
-    def confusion_probe(sf_dir):
-        from pandasy_spark.extended.ml import confusion_multiclass
-        from pandasy_spark.extended.text import lang_id
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        lp = docs.select(
-            F.col("lang").alias("label"),
-            lang_id(F.col("text")).alias("pred"),
-        )
-        return confusion_multiclass(lp, "label", "pred")
-
-    def variant_probe(sf_dir):
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        v = ev.select(
-            "event_type", F.parse_json(F.col("props")).alias("__v")
-        ).select(
-            "event_type",
-            F.try_variant_get(F.col("__v"), "$.k", "long").alias("__k"),
-        )
-        return v.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("__k").alias("s")
-        )
-
-    results = {}
-    jobs = [
-        ("spatial_dbscan", lambda s10: dbscan_probe(s10), "synth"),
-        ("embedding_rp", lambda s10: rp_probe(s10), "synth"),
-        ("ml_confusion", confusion_probe, "table"),
-        ("expr_variant", variant_probe, "table"),
-    ]
-    for name, fn, kind in jobs:
-        results[name] = {}
-        for label, arg in (
-            [("sf0.1", False), ("sf1.0", True)]
-            if kind == "synth"
-            else [("sf0.1", SRC), ("sf1.0", DST)]
-        ):
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(arg).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r9b_probes": results}))
-
-
-def probe_r10() -> None:
-    """10x probes for the round-10 operators.
-
-    All table-based over the built sf1.0 replicas: OHLC (10x events,
-    same day x type bucket grid -> denser buckets), Tukey fences (10x
-    lineitem through the two-pass quantile + broadcast fence join),
-    mixture upsampling (10x documents through the explode path), and
-    the MCC/Brier eval pair (10x documents through with_text_stats).
-    streaming_full_outer_join is NOT probed: its gate stages a
-    20k-row capped replay (the staged micro-batch machinery-floor
-    class, BASELINE.md) — a 10x table would measure the cap, not the
-    plan.  The SQL-sugar gates share q1-class plans and are likewise
-    skipped."""
-    import time as _t
-
-    from pandasy_spark.session import get_spark
-    from pandasy_spark.workload import QUERIES
-
-    spark = get_spark("pandasy-scale-probe-r10")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    results = {}
-    for name in (
-        "events_ohlc",
-        "profile_tukey",
-        "sample_poisson_upsample",
-        "ml_mcc",
-        "ml_brier",
-        # landmark BFS over the 10x co-occurrence graph: lineitem
-        # replicas multiply ORDERS (groups), so edges with support>=2
-        # scale ~10x while the landmark set stays the %199 slice
-        "graph_closeness",
-    ):
-        results[name] = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r10_probes": results}))
-
-
-def probe_r11() -> None:
-    """10x probes for the round-11 operators: recall@k over an
-    inline-replicated embeddings corpus (10x corpus rows through BOTH
-    the exact brute-force pass and the LSH candidate join, fixed
-    10-query set — the production shape: corpus grows, the evaluated
-    query sample does not).  Expected ~linear: the dominant cost is
-    the exact side's corpus scan; the recall join itself is k x |Q|
-    rows and contributes a constant."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from pandasy_spark.extended.ml import recall_at_k
-    from pandasy_spark.extended.similarity import cosine_topk, lsh_cosine_topk
-    from pandasy_spark.session import get_spark
-
-    spark = get_spark("pandasy-scale-probe-r11")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def emb(sf_dir):
-        e = spark.read.parquet(f"{SRC}/embeddings.parquet")
-        if sf_dir == DST:
-            reps = spark.range(10).select(F.col("id").alias("__rep"))
-            e = e.crossJoin(F.broadcast(reps)).select(
-                (F.col("vec_id") * 10 + F.col("__rep")).alias("vec_id"),
-                "embedding",
-            )
-        return e
-
-    def recall_probe(sf_dir):
-        # identical workload shape at both scales (round-11 review
-        # finding): corpus = every replica of the ORIGINAL ids >= 100
-        # (so DST corpus is exactly 10x the SRC corpus), queries = the
-        # 10 distinct original vectors 0-9 (replica 0 only at DST —
-        # never 10 copies of one vector)
-        e = emb(sf_dir)
-        if sf_dir == DST:
-            corpus = e.filter(F.col("vec_id") >= 1000)
-            queries = e.filter(
-                (F.col("vec_id") < 100) & (F.col("vec_id") % 10 == 0)
-            ).select(F.col("vec_id").alias("query_id"), "embedding")
-        else:
-            corpus = e.filter(F.col("vec_id") >= 100)
-            queries = e.filter(F.col("vec_id") < 10).select(
-                F.col("vec_id").alias("query_id"), "embedding"
-            )
-        exact = cosine_topk(corpus, queries, k=5)
-        approx = lsh_cosine_topk(
-            corpus, queries, k=5, query_id_col="query_id", planes=6
-        )
-        return recall_at_k(exact, approx, k=5)
-
-    from pandasy_spark.workload import QUERIES
-
-    def table_probe(name):
-        return lambda sf_dir: QUERIES[name](spark, sf_dir)
-
-    results = {}
-    for name, fn in (
-        ("ml_recall_at_k", recall_probe),
-        # table-based probes over the built sf1.0 replicas: MAD
-        # fences (10x lineitem through two two-pass quantiles),
-        # rolling correlation (10x events -> same bounded day grid),
-        # token bucket (10x events through the per-key collect+fold),
-        # n-gram novelty (10x documents through the inverted index)
-        ("profile_mad", table_probe("profile_mad")),
-        ("events_rolling_corr", table_probe("events_rolling_corr")),
-        ("events_rate_limit", table_probe("events_rate_limit")),
-        ("text_ngram_novelty", table_probe("text_ngram_novelty")),
-        # wedge-join link prediction over the 10x co-occurrence graph
-        # (lineitem replicas multiply ORDERS, so edges with
-        # support>=2 densify ~10x and wedge volume grows with them)
-        ("graph_link_prediction", table_probe("graph_link_prediction")),
-        # per-slice AUC over 10x documents (bin-bounded windows)
-        ("ml_auc_by_slice", table_probe("ml_auc_by_slice")),
-        ("profile_bimodality", table_probe("profile_bimodality")),
-    ):
-        results[name] = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    print(json.dumps({"r11_probes": results}))
-
-
-def probe_r11b() -> None:
-    """10x probes for the second round-11 session's operators
-    (batches 11-16), table-based over the built sf1.0 replicas.
-    Expected shapes: interpolate/acf reduce 10x events onto the SAME
-    calendar-bounded grid (near-flat past the reduce);
-    threshold_sweep/mrr/fairness are scan + grid-bounded closes;
-    null_pattern is a <=8-group count; id_gaps scans 10x orders keys
-    through the prefix scan; matched_pairs ranks 10x users in salted
-    strata; boilerplate explodes 10x documents' lines through the
-    df join; allen joins 10x-denser per-user interval sets (pair
-    volume grows ~quadratically in per-user density — the probe
-    reports pair counts so the ratio can be work-normalized);
-    compaction_plan and fingerprint are constant-size constructions
-    riding bigger scans."""
-    import time as _t
-
-    from pandasy_spark.session import get_spark
-    from pandasy_spark.workload import QUERIES
-
-    spark = get_spark("pandasy-scale-probe-r11b")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def table_probe(name):
-        return lambda sf_dir: QUERIES[name](spark, sf_dir)
-
-    results = {}
-    for name in (
-        "events_interpolate", "events_acf", "ml_threshold_sweep",
-        "ml_fairness", "ml_mrr", "profile_null_pattern",
-        "profile_id_gaps", "sample_matched_pairs",
-        "layout_compaction_plan", "multimodal_fingerprint",
-        "text_boilerplate", "events_allen",
-    ):
-        fn = table_probe(name)
-        results[name] = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    # work-volume context for the allen ratio: pair counts per scale
-    n_src = QUERIES["events_allen"](spark, SRC).agg(
-        {"n": "sum"}
-    ).collect()[0][0]
-    n_dst = QUERIES["events_allen"](spark, DST).agg(
-        {"n": "sum"}
-    ).collect()[0][0]
-    print("events_allen pairs:", n_src, "->", n_dst, flush=True)
-    print(json.dumps({"r11b_probes": results}))
-
-
-def probe_r11c() -> None:
-    """10x probes for round-11 session-2 batches 17-21 (table-based
-    over the built sf1.0 replicas; streaming_pattern_match is not
-    probed — staged capped replay, the streaming-gate convention).
-    Expected shapes: fd scans 10x orders through per-pair distinct
-    aggregates; hysteresis and pattern_match fold 10x-longer per-key
-    sequences (linear in events); assortativity joins the 10x-denser
-    co-occurrence graph (wedge-family volume growth — report edge
-    counts for work normalization); sketch_quantile's sample stays
-    k=1000 while the scan and certification grow linearly;
-    systematic rides stable_row_ids' fixed floor; kmv_diff's probe
-    stays 64 rows while the exact certification anti-join grows."""
-    import time as _t
-
-    from pandasy_spark.session import get_spark
-    from pandasy_spark.workload import QUERIES
-
-    spark = get_spark("pandasy-scale-probe-r11c")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    results = {}
-    for name in (
-        "profile_fd", "events_hysteresis", "graph_assortativity",
-        "sketch_quantile", "events_pattern_match",
-        "sample_systematic", "sketch_kmv_diff",
-    ):
-        results[name] = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                best = min(best, _t.perf_counter() - t0)
-            results[name][label] = round(best, 2)
-        results[name]["ratio"] = round(
-            results[name]["sf1.0"] / max(results[name]["sf0.1"], 1e-9), 2
-        )
-        print(name, results[name], flush=True)
-    for label, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-        row = QUERIES["graph_assortativity"](spark, sf_dir).collect()[0]
-        print("assortativity", label, "nodes", row.n_nodes,
-              "edges", row.n_edges, flush=True)
-    print(json.dumps({"r11c_probes": results}))
+        ratios[q] = {
+            "wall": round(out["x10"]["queries"][q]
+                          / max(out[base]["queries"][q], 1e-9), 2),
+            "jobs": f"{a['jobs']} -> {b['jobs']}",
+        }
+    print(json.dumps({f"x10_over_{base}_ratio": ratios}))
 
 
 if __name__ == "__main__":
-    {
-        "build": build,
-        "bench": bench,
-        "probe": probe,
-        "probe_r5": probe_r5,
-        "probe_r6": probe_r6,
-        "probe_r6b": probe_r6b,
-        "probe_r6c": probe_r6c,
-        "probe_r6d": probe_r6d,
-        "probe_r6e": probe_r6e,
-        "probe_r8": probe_r8,
-        "probe_r9": probe_r9,
-        "probe_r9b": probe_r9b,
-        "probe_r10": probe_r10,
-        "probe_r11": probe_r11,
-        "probe_r11b": probe_r11b,
-        "probe_r11c": probe_r11c,
-        "bpe50k": bpe50k,
-    }[sys.argv[1]]()
+    if sys.argv[1:2] == ["build"]:
+        build()
+    elif sys.argv[1:2] == ["probe"] and len(sys.argv) == 3:
+        probe(sys.argv[2])
+    else:
+        sys.exit(__doc__)

@@ -187,19 +187,39 @@ def test_stream_state_partitions_volume_linear_and_capped(monkeypatch):
             stream_state_partitions(5_000)
 
 
-def test_no_concurrency_flag_parses_falsey_values(monkeypatch, spark):
-    """SPARK_GRAFT_NO_CONCURRENCY=0/false must keep concurrency ON
-    (r11 advice: any-non-empty-string parsing was an A/B footgun).
-    Either way the pinned results are identical."""
+def test_no_concurrency_flag_parses_falsey_values(spark):
+    """Concurrent pins return each input's rows, in input order."""
     from pandasy_spark.concurrency import materialize_concurrently
 
     a = spark.range(5).selectExpr("id", "id * 2 AS x")
     b = spark.range(3).selectExpr("id", "id + 10 AS y")
-    for flag in ("", "0", "false", "1", "yes"):
-        monkeypatch.setenv("SPARK_GRAFT_NO_CONCURRENCY", flag)
-        ra, rb = materialize_concurrently([a, b])
-        assert sorted(map(tuple, ra.collect())) == [(i, i * 2) for i in range(5)]
-        assert sorted(map(tuple, rb.collect())) == [(i, i + 10) for i in range(3)]
+    ra, rb = materialize_concurrently([a, b])
+    assert sorted(map(tuple, ra.collect())) == [(i, i * 2) for i in range(5)]
+    assert sorted(map(tuple, rb.collect())) == [(i, i + 10) for i in range(3)]
+
+
+def test_concurrent_pins_keep_callers_job_group(spark):
+    """The jobs of concurrent pins land in the calling thread's job
+    group, as serial pins' do: a plain pool thread starts without the
+    caller's local properties, which undercounts every job-group
+    reading of a gate that pins concurrently."""
+    import uuid
+
+    from pandasy_spark.concurrency import materialize_concurrently
+
+    sc = spark.sparkContext
+    group = f"pins-{uuid.uuid4().hex}"
+    a = spark.range(5).selectExpr("id", "id * 2 AS x")
+    b = spark.range(3).selectExpr("id", "id + 10 AS y")
+    sc.setJobGroup(group, "concurrent pins")
+    try:
+        materialize_concurrently([a, b])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # each eager pin runs at least one job
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
 
 
 def _multi_vs_single(spark, p_millis, frames, groupings):

@@ -112,3 +112,59 @@ def test_udf_gate_runs_outside_repo_root(sf_dir, tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ROWS 200" in out.stdout, out.stdout[-3000:]
+
+
+def test_bench_records_gate_layers(sf_dir):
+    """bench.py, the one gate-timing harness, splits each gate's kept
+    wall into construct and exec and counts its jobs, stages and tasks
+    through public Spark APIs; a subset run leaves the full records
+    alone."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def records():
+        return {
+            p: open(p, "rb").read()
+            for p in glob.glob(os.path.join(repo, "BENCH_FULL_LATEST*.json"))
+        }
+
+    before = records()
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_QUERIES="q1_pricing_summary,agg_approx",
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_CPUS="2",
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py")],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert records() == before
+    last = json.loads(out.stdout.strip().splitlines()[-1])
+    fields = {"construct_s", "exec_s", "construct_jobs", "jobs", "stages",
+              "tasks"}
+    for name in ("q1_pricing_summary", "agg_approx"):
+        layer = last["layers"][name]
+        assert set(layer) == fields, layer
+        assert abs(layer["construct_s"] + layer["exec_s"]
+                   - last["queries"][name]) <= 0.002
+    # agg_approx pins its sketches concurrently while it is built
+    approx = last["layers"]["agg_approx"]
+    assert approx["jobs"] >= 1 and approx["construct_jobs"] >= 1, approx
+    # no private scheduler probes anywhere in the repo's Python
+    needle = "dag" + "Scheduler"
+    offenders = []
+    for root, dirs, files in os.walk(repo):
+        dirs[:] = [d for d in dirs if not d.startswith(".")
+                   and d not in ("__pycache__", "spark-warehouse")]
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and needle in open(path).read():
+                offenders.append(path)
+    assert offenders == []
